@@ -5,7 +5,8 @@
 #
 # Runs the full driver-shaped gate at sf0.01: graft.Verify dumps every
 # query (exits non-zero on any per-query failure, writing failures.json),
-# then the DuckDB oracle compares all of them. Takes ~4 min.
+# then the DuckDB oracle compares all of them; then one etl_corpus
+# benchmark run gates the ETL pipeline's sinks. Takes ~5 min.
 #
 # Usage: scripts/preflight.sh [sfDir]
 set -euo pipefail
@@ -20,5 +21,13 @@ echo "[preflight] DuckDB oracle compare"
 ORACLE_OUT="$(python3 scripts/check_oracle.py "$SF" "$OUT")"
 echo "$ORACLE_OUT" | tail -3
 echo "$ORACLE_OUT" | tail -1 | grep -q " 0 fail" \
-  && echo "[preflight] GREEN" \
   || { echo "[preflight] RED — fix before building"; exit 1; }
+echo "[preflight] ETL pipeline through the benchmark's sink checks"
+# one untraced etl_corpus run: EtlMain over the generated scraper corpus,
+# its CSV/INSERT/JSONL sinks checked against the generator's counts
+ETL_OUT="$(python3 perfbench/run.py --workload etl_corpus --seed 1 --seconds 10 --trace 0)" \
+  || { echo "[preflight] RED — ETL benchmark run crashed"; exit 1; }
+echo "$ETL_OUT" | tail -1
+echo "$ETL_OUT" | tail -1 | grep -q '"correct": true' \
+  && echo "[preflight] GREEN" \
+  || { echo "[preflight] RED — ETL sinks wrong, fix before building"; exit 1; }

@@ -1,60 +1,22 @@
 package graft.etl
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** End-to-end pipeline over FIXTURES.md-shaped files: the four raw-file
-  * variants with sentinels, mixed Day/Year types, mojibake, emails in
-  * countries, empty arrays and null citations — the reference's mess.
+/** End-to-end pipeline over the FIXTURES.md-shaped files of
+  * [[EtlFixtures]]: the four raw-file variants with sentinels, mixed
+  * Day/Year types, mojibake, emails in countries, empty arrays and
+  * null citations — the reference's mess.
   */
 class EtlPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  def write(dir: Path, name: String, content: String): String = {
-    val p = dir.resolve(name)
-    Files.write(p, content.getBytes(StandardCharsets.UTF_8))
-    p.toString
-  }
-
   lazy val dir: Path = Files.createTempDirectory("graft-fixtures")
 
-  // SD raw: journal_name, no publisher; A2 carries date sentinels
-  lazy val sdRaw = write(dir, "sd_raw.json",
-    """[
-      |{"title": "Alpha Paper", "authors": ["Ann A"], "authors_with_affiliations": [{"author": "Ann A", "university": "Uni X", "country": "France", "location": "Uni X, France"}], "universities": ["Uni X"], "countries": ["France"], "Date": "19 July 2024", "Month": "July", "Day": 19, "Year": 2024, "abstract": "An abstract.", "doi": "https://doi.org/10.1016/a1", "citations": 3, "type": "RESEARCH-ARTICLE", "keywords": ["ai", "ml"], "topic": "AI", "website": "Science Direct", "journal_name": "Journal A"},
-      |{"title": "Title not found", "authors": ["Bob B"], "authors_with_affiliations": [{"author": "Bob B", "university": "Uni Y", "country": "Spain", "location": "Uni Y, Spain"}], "universities": ["Uni Y"], "countries": ["Spain"], "Date": "Date not found", "Month": "Month not found", "Day": "Day not found", "Year": "Year not found", "abstract": "Sentinel row.", "doi": "https://doi.org/10.1016/a2", "citations": 1, "type": "RESEARCH-ARTICLE", "keywords": ["iot"], "topic": "IoT", "website": "Science Direct", "journal_name": "Journal S"}
-      |]""".stripMargin)
-
-  // SD upd: publisher struct; A1 enriched (dedup must prefer this row),
-  // A3 good, A4 has ISSN N/A (P1 drops it)
-  lazy val sdUpd = write(dir, "sd_upd.json",
-    """[
-      |{"title": "Alpha Paper", "authors": ["Ann A"], "authors_with_affiliations": [{"author": "Ann A", "university": "Uni X", "country": "France", "location": "Uni X, France"}], "universities": ["Uni X"], "countries": ["France"], "Date": "19 July 2024", "Month": "July", "Day": 19, "Year": 2024, "abstract": "An abstract.", "doi": "https://doi.org/10.1016/a1", "citations": 3, "type": "RESEARCH-ARTICLE", "keywords": ["ai", "ml"], "topic": "AI", "website": "Science Direct", "publisher": {"name": "Journal A", "ISSN": "11112222", "Quartile": "Q1"}},
-      |{"title": "Gamma Study", "authors": ["Cara C", "Dan D"], "authors_with_affiliations": [{"author": "Cara C", "university": "Uni Z", "country": "USA", "location": "Uni Z, USA"}, {"author": "Dan D", "university": "Uni Z", "country": "USA", "location": "Uni Z, USA"}], "universities": ["Uni Z"], "countries": ["USA"], "Date": "2 March 2023", "Month": "March", "Day": 2, "Year": 2023, "abstract": "Gamma text.", "doi": "https://doi.org/10.1016/a3", "citations": 0, "type": "RESEARCH-ARTICLE", "keywords": ["ai"], "topic": "AI", "website": "Science Direct", "publisher": {"name": "Journal G", "ISSN": "33334444", "Quartile": "Q2"}},
-      |{"title": "Delta Note", "authors": ["Eve E"], "authors_with_affiliations": [{"author": "Eve E", "university": "Uni W", "country": "UK", "location": "Uni W, UK"}], "universities": ["Uni W"], "countries": ["UK"], "Date": "5 May 2022", "Month": "May", "Day": 5, "Year": 2022, "abstract": "Delta text.", "doi": "https://doi.org/10.1016/a4", "citations": 2, "type": "RESEARCH-ARTICLE", "keywords": ["crypto"], "topic": "Cryptography", "website": "Science Direct", "publisher": {"name": "Journal D", "ISSN": "N/A", "Quartile": "Q3"}}
-      |]""".stripMargin)
-
-  // IEEE raw: top-level ISSN + locations, int Day/Year
-  lazy val ieeeRaw = write(dir, "ieee_raw.json",
-    """[
-      |{"title": "Beta Method", "authors": ["Flo F"], "authors_with_affiliations": [{"author": "Flo F", "university": "Inst Q", "country": "PRC", "location": "Inst Q, PRC"}], "universities": ["Inst Q"], "countries": ["PRC"], "locations": ["Inst Q, PRC"], "Date": "1 January 2021", "Month": "January", "Day": 1, "Year": 2021, "abstract": "Beta text.", "doi": "https://doi.org/10.1109/b1", "citations": 7, "type": "RESEARCH-ARTICLE", "keywords": ["big data"], "topic": "Big Data", "website": "IEEE Xplore", "journal_name": "IEEE Trans B", "ISSN": "55556666"}
-      |]""".stripMargin)
-
-  // IEEE upd: B1 enriched; B2 null citations; B3 empty authors;
-  // B4 mojibake + email artifacts + apostrophes/quotes
-  lazy val ieeeUpd = write(dir, "ieee_upd.json",
-    """[
-      |{"title": "Beta Method", "authors": ["Flo F"], "authors_with_affiliations": [{"author": "Flo F", "university": "Inst Q", "country": "PRC", "location": "Inst Q, PRC"}], "universities": ["Inst Q"], "countries": ["PRC"], "locations": ["Inst Q, PRC"], "Date": "1 January 2021", "Month": "January", "Day": 1, "Year": 2021, "abstract": "Beta text.", "doi": "https://doi.org/10.1109/b1", "citations": 7, "type": "RESEARCH-ARTICLE", "keywords": ["big data"], "topic": "Big Data", "website": "IEEE Xplore", "publisher": {"name": "IEEE Trans B", "ISSN": "55556666", "Quartile": "Q1"}},
-      |{"title": "No Citations", "authors": ["Gil G"], "authors_with_affiliations": [{"author": "Gil G", "university": "Inst R", "country": "Japan", "location": "Inst R, Japan"}], "universities": ["Inst R"], "countries": ["Japan"], "locations": [], "Date": "9 June 2020", "Month": "June", "Day": 9, "Year": 2020, "abstract": "x", "doi": "https://doi.org/10.1109/b2", "citations": null, "type": "RESEARCH-ARTICLE", "keywords": ["devops"], "topic": "DevOps", "website": "IEEE Xplore", "publisher": {"name": "IEEE Trans B", "ISSN": "55556666", "Quartile": "Q1"}},
-      |{"title": "Empty Authors", "authors": [], "authors_with_affiliations": [], "universities": [], "countries": [], "locations": [], "Date": "9 June 2020", "Month": "June", "Day": 9, "Year": 2020, "abstract": "y", "doi": "https://doi.org/10.1109/b3", "citations": 4, "type": "RESEARCH-ARTICLE", "keywords": ["devops"], "topic": "DevOps", "website": "IEEE Xplore", "publisher": {"name": "IEEE Trans B", "ISSN": "55556666", "Quartile": "Q1"}},
-      |{"title": "Hal's \"Grand\" Theory", "authors": ["Hal H"], "authors_with_affiliations": [{"author": "Hal H", "university": "Inst S", "country": "h.h@inst.edu", "location": "x"}, {"author": "Hal H", "university": "Inst S", "country": "Republic of Korea", "location": "Inst S, Korea"}], "universities": ["Inst S"], "countries": ["Republic of Korea", "h.h@inst.edu"], "locations": [], "Date": "20 February 2024", "Month": "February", "Day": 20, "Year": 2024, "abstract": "CafÃ© rÃ©sumÃ© text.", "doi": "https://doi.org/10.1109/b4", "citations": 11, "type": "RESEARCH-ARTICLE", "keywords": ["blockchain", "ai"], "topic": "Blockchain", "website": "IEEE Xplore", "publisher": {"name": "IEEE Trans C", "ISSN": "77778888", "Quartile": "Q2"}}
-      |]""".stripMargin)
-
-  lazy val merged = Ingest.readMerged(spark, Seq(sdRaw, sdUpd, ieeeRaw, ieeeUpd))
+  lazy val merged = Ingest.readMerged(spark, EtlFixtures.writeAll(dir))
   lazy val clean = Clean(merged)
   lazy val star = StarSchema.build(clean)
 
@@ -168,7 +130,7 @@ class EtlPipelineSpec extends AnyFunSuite {
   }
 
   test("corrupt JSONL lines are quarantined per row, not per file") {
-    val p = write(dir, "landing.jsonl",
+    val p = EtlFixtures.write(dir, "landing.jsonl",
       """{"title": "Good 1", "doi": "https://doi.org/10.1016/q1", "topic": "AI", "citations": 1}
         |{"title": "Good 2", "doi": "https://doi.org/10.1016/q2", "topic": "IoT", "citations": 2}
         |{"title": "TRUNCATED, no close quote, "doi": !!!
@@ -183,7 +145,7 @@ class EtlPipelineSpec extends AnyFunSuite {
 
   test("normalize keeps every NULL-doi row (missing key is not a shared key)") {
     // three distinct articles without a doi + one real dup pair
-    val p = write(dir, "nodoi.json",
+    val p = EtlFixtures.write(dir, "nodoi.json",
       """[
         |{"title": "NoDoi One", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
         |{"title": "NoDoi Two", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
@@ -201,7 +163,7 @@ class EtlPipelineSpec extends AnyFunSuite {
     // doi-less corpus would put 10% of the data on one task just to be
     // kept verbatim. Plan shape: the Window's input subtree must filter
     // to isnotnull(doi), and the null branch must be window-free.
-    val p = write(dir, "nodoi_plan.json",
+    val p = EtlFixtures.write(dir, "nodoi_plan.json",
       """[
         |{"title": "NoDoi One", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
         |{"title": "WithDoi", "doi": "https://doi.org/10.1109/z9", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"}
@@ -228,7 +190,7 @@ class EtlPipelineSpec extends AnyFunSuite {
   test("normalize survivor choice is deterministic across partitionings") {
     // same doi, same preference tier, same website — only the content
     // hash tie-break distinguishes; survivor must not depend on layout
-    val p = write(dir, "tie.json",
+    val p = EtlFixtures.write(dir, "tie.json",
       """[
         |{"title": "Tie A", "doi": "https://doi.org/10.1109/t1", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
         |{"title": "Tie B", "doi": "https://doi.org/10.1109/t1", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"}

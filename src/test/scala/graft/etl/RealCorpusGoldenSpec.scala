@@ -37,9 +37,13 @@ import graft.TestSpark
 class RealCorpusGoldenSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def jsonFiles(dir: String): Seq[String] =
+  private def jsonFiles(dir: String): Seq[String] = {
+    // fail naming the cause, not with listFiles' bare NullPointerException
+    require(new File(dir).isDirectory,
+      s"reference corpus $dir is absent: this spec needs the reference scraper files")
     new File(dir).listFiles.filter(_.getName.endsWith(".json"))
       .map(_.getAbsolutePath).sorted.toSeq
+  }
 
   private lazy val inputs =
     jsonFiles("/root/reference/IEEE") ++ jsonFiles("/root/reference/ScienceDirect")
