@@ -8,7 +8,11 @@ import org.apache.spark.sql.functions._
   * The reference stages scraper JSON through MongoDB and re-exports it
   * (DB/MongoDB.py:36-41, DB/ETL.ipynb c4); here the landing directory
   * of JSON-array files IS the source of record and the multi-source
-  * merge is a unionByName — no staging database, no driver round-trip.
+  * merge is ONE multi-path scan — no staging database, no driver
+  * round-trip. However many landing files there are, the plan has one
+  * file-scan relation (one file index, one codegen subtree), and Spark
+  * packs the small files into splits instead of running a task per
+  * file.
   *
   * Every read uses the explicit permissive schema (Schemas.articleSchema)
   * — inference is never on the data path, which at 100 TB also saves a
@@ -16,13 +20,17 @@ import org.apache.spark.sql.functions._
   */
 object Ingest {
 
-  /** S1: one JSON-array file (the scraper's append format,
-    * ScienceDirect/ScienceDirect.py:457-488) or a directory of them. */
-  def readArticles(spark: SparkSession, path: String): DataFrame =
+  /** S1: JSON-array files (the scraper's append format,
+    * ScienceDirect/ScienceDirect.py:457-488) or directories of them,
+    * read as one relation. Every variant is read under the same
+    * explicit schema, so the multi-path read returns exactly the rows
+    * a per-file union would: a path listed twice is read twice, and a
+    * missing path fails analysis naming it. */
+  def readArticles(spark: SparkSession, paths: String*): DataFrame =
     spark.read
       .schema(Schemas.articleSchema)
       .option("multiLine", true)       // whole-file JSON arrays, not JSONL
-      .json(path)
+      .json(paths: _*)
 
   /** JSONL variant for engine-native round-trips. */
   def readArticlesJsonl(spark: SparkSession, path: String): DataFrame =
@@ -104,6 +112,10 @@ object Ingest {
     deduped.unionByName(withPublisher.filter(col("doi").isNull))
   }
 
-  def readMerged(spark: SparkSession, paths: Seq[String]): DataFrame =
-    normalize(paths.map(readArticles(spark, _)).reduce(_.unionByName(_)))
+  /** All landing inputs through one scan, then [[normalize]]. An empty
+    * list is an error: a zero-path read would silently yield no rows. */
+  def readMerged(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    require(paths.nonEmpty, "Ingest.readMerged: no input files")
+    normalize(readArticles(spark, paths: _*))
+  }
 }

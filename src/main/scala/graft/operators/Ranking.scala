@@ -42,11 +42,16 @@ object Ranking {
     // bounds — and offsets computed from layout A joined to rows
     // living in layout B assign duplicated/skipped global ids. That is
     // silent id corruption, observed once as a ±1 golden-count flake
-    // on the real corpus. The lazy localCheckpoint pins ONE
-    // materialized layout both readers share (lazy: plan construction
-    // stays side-effect-free; the first action materializes it). An
-    // executor loss after materialization fails the job LOUDLY —
-    // recompute-with-different-bounds is exactly what must not happen.
+    // on the real corpus. The localCheckpoint pins ONE materialized
+    // layout both readers share. It is NOT side-effect-free: even with
+    // eager=false it calls execute() on the physical plan, which runs
+    // the range partitioner's sampling job at once; under AQE (on in
+    // every session here) execute() also runs every upstream shuffle
+    // stage, and any cache fill below them, before this method
+    // returns. Only the final partition-local stage waits for the
+    // first action. An executor loss after materialization fails the
+    // job LOUDLY — recompute-with-different-bounds is exactly what
+    // must not happen.
     val parted = df.repartitionByRange(n, sortCols: _*)
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint(false)

@@ -28,6 +28,51 @@ class EtlPipelineSpec extends AnyFunSuite {
     assert(!merged.columns.contains("journal_name"))
   }
 
+  /** The per-file formulation readMerged replaced, kept as the reference. */
+  private def perFileUnion(paths: Seq[String]) =
+    Ingest.normalize(paths.map(Ingest.readArticles(spark, _)).reduce(_.unionByName(_)))
+
+  private def rowMultiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private def scanLeaves(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+    }.size
+
+  test("readMerged plans one scan per normalize branch, whatever the file count") {
+    val files = EtlFixtures.writeAll(dir)
+    // the doi-dedup window and the null-doi bypass each read the one
+    // multi-path relation; a per-file union would carry 2 × files
+    assert(scanLeaves(Ingest.readMerged(spark, files)) === 2)
+    assert(scanLeaves(Ingest.readMerged(spark, files ++ files)) === 2)
+  }
+
+  test("readMerged returns the per-file union's rows") {
+    val files = EtlFixtures.writeAll(dir)
+    assert(rowMultiset(Ingest.readMerged(spark, files)) === rowMultiset(perFileUnion(files)))
+    // a path listed twice is read twice, exactly like the union
+    val dup = files :+ files.head
+    assert(Ingest.readArticles(spark, dup: _*).count() ===
+      dup.map(Ingest.readArticles(spark, _).count()).sum)
+    assert(rowMultiset(Ingest.readMerged(spark, dup)) === rowMultiset(perFileUnion(dup)))
+    // a directory argument, alone and mixed with a file
+    val sub = Files.createTempDirectory(dir, "landing")
+    EtlFixtures.writeAll(sub)
+    for (paths <- Seq(Seq(sub.toString), Seq(sub.toString, files.head)))
+      assert(rowMultiset(Ingest.readMerged(spark, paths)) === rowMultiset(perFileUnion(paths)))
+  }
+
+  test("readMerged fails loudly on a missing path or an empty input list") {
+    val missing = dir.resolve("no_such_landing_file.json").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Ingest.readMerged(spark, EtlFixtures.writeAll(dir) :+ missing)
+    }
+    assert(e.getMessage.contains(missing), e.getMessage)
+    val empty = intercept[IllegalArgumentException](Ingest.readMerged(spark, Nil))
+    assert(empty.getMessage.contains("Ingest.readMerged: no input files"))
+  }
+
   test("cleaning keeps exactly the well-formed rows") {
     val dois = clean.select("doi").collect().map(_.getString(0)).sorted
     // a2 sentinel+unenriched, a4 N/A ISSN, b2 null citations, b3 empty authors drop;
