@@ -8,11 +8,14 @@ import org.apache.spark.sql.functions._
   * The reference stages scraper JSON through MongoDB and re-exports it
   * (DB/MongoDB.py:36-41, DB/ETL.ipynb c4); here the landing directory
   * of JSON-array files IS the source of record and the multi-source
-  * merge is ONE multi-path scan — no staging database, no driver
-  * round-trip. However many landing files there are, the plan has one
-  * file-scan relation (one file index, one codegen subtree), and Spark
-  * packs the small files into splits instead of running a task per
-  * file.
+  * merge reads ONE multi-path relation — no staging database, no
+  * driver round-trip. However many landing files there are, the plan
+  * has one file-scan relation (one file index, one codegen subtree),
+  * and Spark packs the small files into splits instead of running a
+  * task per file. It is not one pass over the bytes: [[normalize]]
+  * reads the relation in two branches (the doi-dedup window and the
+  * null-doi bypass), and each branch's scan parses every landing file,
+  * so one ingest reads its input twice.
   *
   * Every read uses the explicit permissive schema (Schemas.articleSchema)
   * — inference is never on the data path, which at 100 TB also saves a
@@ -103,7 +106,8 @@ object Ingest {
     // window, not through it: partitionBy hashes every null to the
     // same task, so a corpus that is 10% doi-less would put 10% of
     // 100 TB on one executor just to keep rows the filter would pass
-    // anyway. The two branches are disjoint filters over one scan.
+    // anyway. The two branches are disjoint filters over one relation,
+    // each scanning every file.
     val deduped = withPublisher
       .filter(col("doi").isNotNull)
       .withColumn("__rn", row_number().over(w))
@@ -112,7 +116,7 @@ object Ingest {
     deduped.unionByName(withPublisher.filter(col("doi").isNull))
   }
 
-  /** All landing inputs through one scan, then [[normalize]]. An empty
+  /** All landing inputs through one relation, then [[normalize]]. An empty
     * list is an error: a zero-path read would silently yield no rows. */
   def readMerged(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "Ingest.readMerged: no input files")

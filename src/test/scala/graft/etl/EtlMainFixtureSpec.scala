@@ -1,15 +1,15 @@
 package graft.etl
 
 import java.io.{ByteArrayOutputStream, File, PrintStream}
-import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -93,22 +93,70 @@ class EtlMainFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("escape", "\"").csv(dir)
 
   /** Runs the entry point into a fresh temp dir; returns the dir and
-    * the `[etl] key=N` pairs it printed. */
-  private def runMain(compat: Boolean): (String, Map[String, Long]) = {
+    * the `[etl] ` lines it printed, in order. */
+  private def runMain(compat: Boolean): (String, Seq[String]) = {
     spark // the shared session must be active before main() looks for one
     val out = Files.createTempDirectory("graft-etlmain-out").toString
     val buf = new ByteArrayOutputStream()
     Console.withOut(new PrintStream(buf, true, "UTF-8")) {
       EtlMain.main(((if (compat) Seq("--compat") else Nil) ++ (out +: inputs)).toArray)
     }
-    val printed = buf.toString("UTF-8").linesIterator.filter(_.startsWith("[etl] "))
-      .flatMap(_.stripPrefix("[etl] ").split(" "))
+    (out, buf.toString("UTF-8").linesIterator.filter(_.startsWith("[etl] ")).toSeq)
+  }
+
+  /** The `key=N` pairs of the printed `[etl] ` lines. */
+  private def printedCounts(lines: Seq[String]): Map[String, Long] =
+    lines.flatMap(_.stripPrefix("[etl] ").split(" "))
       .map { kv => val Array(k, v) = kv.split("="); k -> v.toLong }.toMap
-    (out, printed)
+
+  /** Each sink directory under `out` (relative path) → the lines of its
+    * part files, sorted. */
+  private def sinkLines(out: String): Map[String, Seq[String]] = {
+    val root = Paths.get(out)
+    val parts = Using.resource(Files.walk(root))(_.iterator.asScala.toList)
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.startsWith("part-"))
+    parts.groupBy(p => root.relativize(p.getParent).toString).map { case (dir, ps) =>
+      dir -> ps.flatMap(p => Files.readAllLines(p).asScala).sorted
+    }
+  }
+
+  /** What a listener saw while `body` ran: the jobs it started, the
+    * most jobs running at once, and the most SQL executions (queries)
+    * with a job running at once. One query's own jobs overlap (AQE
+    * runs independent stages and broadcasts together), so only the
+    * last tells queries run one at a time from queries run together. */
+  private case class Jobs(started: Int, peakJobs: Int, peakQueries: Int)
+
+  private def withJobs[T](body: => T): (T, Jobs) = {
+    val sc = spark.sparkContext
+    var started, peakJobs, peakQueries = 0
+    // job id -> its SQL execution id (a job outside one is its own)
+    val running = scala.collection.mutable.Map.empty[Int, String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = running.synchronized {
+        started += 1
+        running(e.jobId) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .getOrElse(s"job ${e.jobId}")
+        peakJobs = peakJobs max running.size
+        peakQueries = peakQueries max running.values.toSet.size
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        running.synchronized(running -= e.jobId)
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    val result = try {
+      val r = body
+      ListenerBusDrain.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    (result, running.synchronized(Jobs(started, peakJobs, peakQueries)))
   }
 
   private def checkRun(compat: Boolean): Unit = {
-    val (out, printed) = runMain(compat)
+    val (out, lines) = runMain(compat)
+    val printed = printedCounts(lines)
     try {
       val tables = Expected.tables(compat)
       assert(printed === tables ++ Map(
@@ -143,14 +191,32 @@ class EtlMainFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a run whose sink write throws still releases every relation it cached") {
-    spark.catalog.clearCache()
-    val out = Files.createTempDirectory("graft-etlmain-fail")
-    // a regular file where the CSV sink directory must go
-    Files.write(out.resolve("csv"), Array[Byte](1))
-    try {
-      intercept[Exception](EtlMain.main((out.toString +: inputs).toArray))
-      assert(spark.sharedState.cacheManager.isEmpty, "failed run left relations cached")
-    } finally Writers.deleteRecursively(out.toFile)
+    // `blocker` puts something where a sink directory must go: a regular
+    // file at `csv` fails every table's CSV write; a dangling symlink at
+    // `csv/articles` fails only the fact table's, whose task waits for
+    // its dims while the other tables' tasks are still in flight (a
+    // regular file there would be deleted by the overwrite-mode write)
+    def failingRun(blocker: Path => Unit): Unit = {
+      spark.catalog.clearCache()
+      val out = Files.createTempDirectory("graft-etlmain-fail")
+      blocker(out)
+      try {
+        intercept[Exception](EtlMain.main((out.toString +: inputs).toArray))
+        assert(spark.sharedState.cacheManager.isEmpty, "failed run left relations cached")
+        ListenerBusDrain.drain(spark.sparkContext)
+        assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+          "failed run left jobs running")
+        val poolThreads = Thread.getAllStackTraces.keySet.asScala
+          .filter(_.getName.startsWith(EtlMain.PoolThread))
+        poolThreads.foreach(_.join(10000))
+        assert(!poolThreads.exists(_.isAlive), "failed run left pool threads alive")
+      } finally Writers.deleteRecursively(out.toFile)
+    }
+    failingRun(out => Files.write(out.resolve("csv"), Array[Byte](1)))
+    failingRun { out =>
+      Files.createDirectories(out.resolve("csv"))
+      Files.createSymbolicLink(out.resolve("csv/articles"), out.resolve("missing"))
+    }
   }
 
   /** Bytes read through Hadoop's local file system, JVM-wide: the
@@ -164,31 +230,54 @@ class EtlMainFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("default mode scans the input once and launches a bounded number of jobs") {
     spark.catalog.clearCache()
-    val sc = spark.sparkContext
     // the bytes of one ingest: readMerged forced once on its own
     val before = localBytesRead()
     Ingest.readMerged(spark, inputs).write.format("noop").mode("overwrite").save()
     val oneIngest = localBytesRead() - before
     assert(oneIngest > 0L)
 
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
     val start = localBytesRead()
-    val (out, _) = try {
-      val run = runMain(compat = false)
-      ListenerBusDrain.drain(sc)
-      run
-    } finally sc.removeSparkListener(listener)
+    val ((out, _), Jobs(jobs, _, _)) = withJobs(runMain(compat = false))
     Writers.deleteRecursively(new File(out))
     // a recomputed ingest shows as extra bytes (a separate count action
     // over the uncached ingest read 71,664 here against 44,042)
     assert(localBytesRead() - start === oneIngest, "EtlMain scanned its input more than once")
     // measured on this fixture: 64 jobs. When every table was evaluated
     // once per sink plus once per count action, the same run took 163
-    assert(jobs.get <= 64, s"EtlMain launched ${jobs.get} jobs")
+    assert(jobs <= 64, s"EtlMain launched $jobs jobs")
+  }
+
+  test("default mode runs the star tables' jobs concurrently") {
+    spark.catalog.clearCache()
+    val ((out, _), seen) = withJobs(runMain(compat = false))
+    Writers.deleteRecursively(new File(out))
+    // measured on this fixture: 5 queries (5 jobs) at once. Built and
+    // written in turn, the tables ran 1 query at a time (2 jobs at most)
+    assert(seen.peakQueries >= 2,
+      s"at most ${seen.peakQueries} queries (${seen.peakJobs} jobs) ran at once")
+  }
+
+  test("--compat mode builds only the dims it writes") {
+    spark.catalog.clearCache()
+    val ((out, _), Jobs(jobs, _, _)) = withJobs(runMain(compat = true))
+    Writers.deleteRecursively(new File(out))
+    // measured on this fixture: 47 jobs. Building the default keywords
+    // and authors dims too, only to swap them out, took 53
+    assert(jobs <= 47, s"EtlMain --compat launched $jobs jobs")
+  }
+
+  test("two default runs write the same sink lines and print the same counts") {
+    spark.catalog.clearCache()
+    val (out1, lines1) = runMain(compat = false)
+    val (out2, lines2) = runMain(compat = false)
+    try {
+      assert(lines1.map(_.takeWhile(_ != '=')) === Seq("[etl] merged") ++
+        Seq("articles", "publishers", "keywords", "topics", "dates", "authors",
+          "author_article_mapping", "keywords_articles_mapping").map(t => s"[etl] $t"))
+      assert(lines2 === lines1)
+      val sinks = sinkLines(out1)
+      assert(sinks.keySet.size === 17, sinks.keySet)
+      assert(sinkLines(out2) === sinks)
+    } finally Seq(out1, out2).foreach(d => Writers.deleteRecursively(new File(d)))
   }
 }
