@@ -258,6 +258,16 @@ object Bench {
     dt
   }
 
+  /** A failed query's cause for the artifact: its exception class and
+    * the first line of its message, capped at 300 chars. Later lines
+    * hold plans and stack traces, which the one-line console JSON has
+    * no room for. */
+  private[graft] def causeJson(t: Throwable): String = {
+    val msg = Option(t.getMessage).getOrElse("").linesIterator.nextOption().getOrElse("")
+    s"""{"class":${JsonText.string(t.getClass.getName)},""" +
+      s""""message":${JsonText.string(msg.take(300))}}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -327,14 +337,20 @@ object Bench {
     require(missing.isEmpty,
       s"headline queries missing from SparkEntry.queries: ${missing.mkString(", ")}")
     val qs = headline
-    // a query that throws reports the sentinel -1, not its time-to-failure
+    // a query that throws reports the sentinel -1, not its time-to-failure,
+    // and its first failure's cause goes to `failures`
+    val causes = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     val results = qs.map { name =>
       val isStream = streamingHeadline.contains(name)
+      def fail(t: Throwable): Unit = if (!causes.contains(name)) {
+        System.err.println(s"[bench] $name failed: $t")
+        causes(name) = t
+      }
+      def failed = causes.contains(name)
       // per-query untimed warm-up: the first execution pays plan
       // compilation + codegen; timing it poisons median AND spread
-      var failed =
-        try { force(SparkEntry.queries(name)(spark, sfDir)); false }
-        catch { case _: Throwable => true }
+      try force(SparkEntry.queries(name)(spark, sfDir))
+      catch { case t: Throwable => fail(t) }
       def sample(): Vector[Double] =
         try {
           collectTimes(() => {
@@ -342,7 +358,7 @@ object Bench {
             force(SparkEntry.queries(name)(spark, sfDir))
             (System.nanoTime() - t0) / 1e9
           }, isStream, reps, maxReps, minSampleSecs, spreadLimit)
-        } catch { case _: Throwable => failed = true; Vector.empty[Double] }
+        } catch { case t: Throwable => fail(t); Vector.empty[Double] }
       var qTicks = cpuTicks()
       var times = if (failed) Vector.empty[Double] else sample()
       def settled = failed ||
@@ -389,6 +405,8 @@ object Bench {
       .mkString("{", ",", "}")
     val errors = results.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
+    val fjson = causes.map { case (k, t) => JsonText.string(k) + ":" + causeJson(t) }
+      .mkString("{", ",", "}")
     // run-level verdict: every query's median is trustworthy — a
     // tail-reader checks ONE flag before comparing numbers across runs
     val spreadOk = results.forall(_._4)
@@ -433,17 +451,17 @@ object Bench {
       .map { case (k, b) => "\"" + k + "\":" + b }.mkString("{", ",", "}")
     // "forcing" stamp: r5 switched count() -> noop write, which makes
     // medians comparable only within runs carrying the same stamp
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","streaming_fixed_sec":$streamingFixed,"grand_total_sec":$grandTotal,"queries":$qjson,"spread":$sjson,"valid":$vjson,"calib_rel":$cjson,"budget_ok":$bjson,"budgets":$budjson,"spread_ok":$spreadOk,"spread_limit":$spreadLimit,"errors":$errors,"reps":$reps,"forcing":"noop_write","shuffle_partitions":$shuffleParts,"loadavg":"$load","loadavg_start":"$startLoad","busy_start":$busyStart,"steal_pct_run":$runSteal,"calib_sec_start":${f3(calib0)},"calib_sec_end":${f3(calibEnd)},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","streaming_fixed_sec":$streamingFixed,"grand_total_sec":$grandTotal,"queries":$qjson,"spread":$sjson,"valid":$vjson,"calib_rel":$cjson,"budget_ok":$bjson,"budgets":$budjson,"spread_ok":$spreadOk,"spread_limit":$spreadLimit,"errors":$errors,"failures":$fjson,"reps":$reps,"forcing":"noop_write","shuffle_partitions":$shuffleParts,"loadavg":"$load","loadavg_start":"$startLoad","busy_start":$busyStart,"steal_pct_run":$runSteal,"calib_sec_start":${f3(calib0)},"calib_sec_end":${f3(calibEnd)},"sf":"$sfDir"}"""
     // The CONSOLE line is deliberately smaller than the file artifact:
     // the r12 round-over-round comparison died because the driver's
     // terminal-tail capture truncated the ~8 KB one-line JSON mid-map
     // (BENCH_r12 `parsed: null` — every per-query median lost). The
     // console line now carries only the driver-contract fields (metric/
-    // value/unit/queries/sf), the two totals, and the run-health
-    // scalars (~2.5 KB); the per-query aux maps (spread/valid/
+    // value/unit/queries/sf), the two totals, failed queries' causes
+    // and the run-health scalars (~2.5 KB); the per-query aux maps (spread/valid/
     // calib_rel/budget_ok/budgets) live in the FILE artifact, which
     // BenchDiff and the round-close workflow read.
-    val consoleJson = s"""{"metric":"total","value":$total,"unit":"sec","streaming_fixed_sec":$streamingFixed,"grand_total_sec":$grandTotal,"queries":$qjsonShort,"spread_ok":$spreadOk,"spread_limit":$spreadLimit,"errors":$errors,"reps":$reps,"forcing":"noop_write","shuffle_partitions":$shuffleParts,"loadavg":"$load","loadavg_start":"$startLoad","busy_start":$busyStart,"steal_pct_run":$runSteal,"calib_sec_start":${f3(calib0)},"calib_sec_end":${f3(calibEnd)},"sf":"$sfDir"}"""
+    val consoleJson = s"""{"metric":"total","value":$total,"unit":"sec","streaming_fixed_sec":$streamingFixed,"grand_total_sec":$grandTotal,"queries":$qjsonShort,"spread_ok":$spreadOk,"spread_limit":$spreadLimit,"errors":$errors,"failures":$fjson,"reps":$reps,"forcing":"noop_write","shuffle_partitions":$shuffleParts,"loadavg":"$load","loadavg_start":"$startLoad","busy_start":$busyStart,"steal_pct_run":$runSteal,"calib_sec_start":${f3(calib0)},"calib_sec_end":${f3(calibEnd)},"sf":"$sfDir"}"""
     println(consoleJson)
     // ALSO write the artifact to a file: BENCH_r09's per-query medians
     // were lost forever to a console-tail truncation — the artifact

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics on edge lists — the iterate-by-join
@@ -62,7 +63,7 @@ object Graph {
     val ed = edges.repartition(col("src"))
       .dropDuplicates("src", "dst")
       .withColumn("deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
+        Window.partitionBy(col("src"))))
       .cache()
     val deg = ed.groupBy("src").agg(min(col("deg")).as("deg")).cache()
     val n = deg.count() // one driver scalar, like any COUNT(*)
@@ -167,94 +168,84 @@ object Graph {
     *  - small-star(u): orient edges toward the larger endpoint; every
     *    smaller neighbor (and u itself) re-attaches to the minimum.
     *
-    * Both operations are ONE groupBy + ONE join over the edge list —
-    * no windows, no driver state; edge weights only ever decrease, so
-    * the (count, hash-sum) fingerprint is a sound fixpoint test (the
-    * d6 label-sum discipline). At convergence every component is a
-    * star centered on its minimum node: labels read off as
-    * min(self, neighbors). Nodes compare with their column's own
+    * Each operation is ONE keyed exchange: a min OVER a window
+    * partitioned by the node, the paper's one reducer per node — no
+    * join back to the input, no driver state. Edge weights only ever
+    * decrease, so the (count, hash-sum) fingerprint is a sound
+    * fixpoint test (the d6 label-sum discipline). At convergence every
+    * component is a star centered on its minimum node: labels read off
+    * as min(self, neighbors). Nodes compare with their column's own
     * ordering — string keys work, ids are never cast.
     *
     * Scale posture: shuffles are sized to the GRAPH (dupClusters'
     * repartition discipline: ~1M edges/partition, never corpus
     * parallelism); each round moves only the current edge relation,
-    * which contraction SHRINKS round over round. localCheckpoint per
-    * round bounds lineage. Output: (node, component), component = the
+    * which contraction SHRINKS round over round, through three
+    * exchanges (large-star window, small-star window, terminal
+    * repartition). The large-star window sends a node's whole
+    * neighbourhood to one task; its row buffer spills, so a hub's task
+    * stays memory-bounded (SCALING.md). localCheckpoint per round
+    * bounds lineage. Output: (node, component), component = the
     * component's minimum node id.
     *
     * Input `pairs`: (src, dst) — undirected, duplicates and self-loops
     * tolerated. Ids must be non-null. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
-    val pIn = pairs.select(col("src").as("a"), col("dst").as("b"))
-    val p0 = pIn.filter(col("a") =!= col("b")).distinct().localCheckpoint()
-    val nEdges = p0.count()
-    val sess = p0.sparkSession
-    val sessParts = sess.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val nParts = math.max(1L,
-      math.min(sessParts.toLong, nEdges / 1000000L + 1L)).toInt
-    // nodes captured from the RAW input, before the self-loop filter:
-    // a node appearing only as (x, x) is a singleton component and
-    // must still get its output row (dupClusters parity) — and star
-    // edges at convergence don't mention every input pairing anyway
+    // ONE job before the loop: the distinct input pairs, self-loops
+    // included, are checkpointed once. The edge count rides that job as
+    // an Observation, and both the loop's edge set and the node set
+    // derive from the checkpoint. Nodes come from the RAW pairs: a node
+    // appearing only as (x, x) is a singleton component and must still
+    // get its output row (dupClusters parity) — and star edges at
+    // convergence don't mention every input pairing anyway.
+    val edgeCount = Observation()
+    val pIn = pairs.select(col("src").as("a"), col("dst").as("b")).distinct()
+      .observe(edgeCount, count(when(col("a") =!= col("b"), lit(1))).as("n"))
+      .localCheckpoint()
+    val nEdges = edgeCount.get("n").asInstanceOf[Long]
+    val p0 = pIn.filter(col("a") =!= col("b"))
     val nodes = pIn.select(col("a").as("node"))
       .unionByName(pIn.select(col("b").as("node"))).distinct()
-      .localCheckpoint()
+    val sessParts = pIn.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val nParts = math.max(1L,
+      math.min(sessParts.toLong, nEdges / 1000000L + 1L)).toInt
 
+    // every row (a, b) of nb with b > a becomes (b, m): m ≤ a < b, so
+    // no self-loop is emitted. Two centers sharing a neighbor b and a
+    // minimum m emit the same (b, m) edge; smallStar's min is
+    // duplicate-insensitive and the round's terminal dropDuplicates
+    // canonicalizes the edge set the fingerprint sees.
     def largeStar(e: DataFrame): DataFrame = {
       val nb = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-      val m = nb.groupBy(col("a")).agg(min(col("b")).as("mn"))
-        .select(col("a"), least(col("a"), col("mn")).as("m"))
-      // NO terminal distinct (r14): two centers u1, u2 sharing both a
-      // neighbor b and a minimum m emit the same (b, m) edge, but every
-      // consumer is duplicate-insensitive — smallStar's min-aggregate
-      // by construction, its join fan-out because the round's terminal
-      // dropDuplicates canonicalizes the edge set (so the convergence
-      // fingerprint sees the identical relation). The distinct was a
-      // full (a, b) exchange + aggregate of the round's edges, every
-      // round, buying only a few duplicate rows' worth of smallStar
-      // input.
-      nb.join(m, "a").filter(col("b") > col("a"))
+      nb.withColumn("m", least(col("a"), min(col("b")).over(Window.partitionBy(col("a")))))
+        .filter(col("b") > col("a"))
         .select(col("b").as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b"))
     }
-    // smallStar's terminal dedup DOUBLES as the round's repartition
-    // (r14, verdict item 5): hash-partitioning on `a` alone co-locates
-    // equal (a, b) rows (hash partitioning on a subset of the grouping
-    // keys satisfies the aggregate's ClusteredDistribution), so the
-    // round's edge relation takes ONE exchange — keyed, sized to the
-    // graph — where the previous shape paid the distinct's (a, b)
-    // exchange AND a second full repartition(nParts, a) right after.
-    def smallStar(e: DataFrame): DataFrame = {
-      val o = e.select(greatest(col("a"), col("b")).as("c"),
-        least(col("a"), col("b")).as("w"))
-      val m = o.groupBy(col("c")).agg(min(col("w")).as("m"))
-      o.join(m, "c").select(col("w").as("a"), col("m").as("b"))
-        .unionByName(m.select(col("c").as("a"), col("m").as("b")))
+    // each row (c, w) emits (w, m) and, through the same explode,
+    // (c, m) — once per row rather than once per c; the terminal
+    // dropDuplicates removes the copies. That dedup is also the round's
+    // repartition: hash-partitioning on `a` alone co-locates equal
+    // (a, b) rows (a subset of the grouping keys satisfies the
+    // aggregate's ClusteredDistribution), so it needs no exchange of
+    // its own.
+    def smallStar(e: DataFrame): DataFrame =
+      e.select(greatest(col("a"), col("b")).as("c"), least(col("a"), col("b")).as("w"))
+        .withColumn("m", min(col("w")).over(Window.partitionBy(col("c"))))
+        .select(explode(array(col("w"), col("c"))).as("a"), col("m").as("b"))
         .filter(col("a") =!= col("b"))
         .repartition(nParts, col("a"))
         .dropDuplicates("a", "b")
-    }
 
     var e = p0.repartition(nParts, col("a"))
     var prev = (-1L, null.asInstanceOf[java.math.BigDecimal])
     var r = 0
     var done = false
     while (!done && r < maxRounds) {
-      // ONE alternation per checkpoint: stacking two alternations per
-      // barrier (the dupClusters double-propagation trick) was
-      // measured 2× SLOWER here (r13: 4.5 → 9.3 s median at sf0.1) —
-      // each star operator references its input relation several
-      // times (e ∪ swap, nb ⋈ m), so un-materialized composition
-      // multiplies subplan evaluation roughly 4× per extra layer,
-      // which costs far more than the barrier it saves. Propagation
-      // (dupClusters) composes linearly and wins from the trick;
-      // contraction does not.
-      //
-      // ONE action per round (r14, verdict item 5): the convergence
-      // fingerprint rides the checkpoint's own materialization job as
-      // an Observation instead of a second aggregate action over the
-      // checkpointed rows — halving the per-round driver barriers.
-      val obs = org.apache.spark.sql.Observation()
+      // ONE alternation per checkpoint, and ONE action per round: the
+      // convergence fingerprint rides the checkpoint's own
+      // materialization job as an Observation. Under AQE each of the
+      // round's three exchanges is its own job, so a round is 4 jobs.
+      val obs = Observation()
       e = smallStar(largeStar(e))
         .observe(obs, count(lit(1)).as("n"),
           sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")).as("h"))

@@ -100,4 +100,15 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.shouldRetry(valid = true, queryStealPct = 50.0, stealLimit = 5.0),
       "a settled median needs no retry regardless of steal")
   }
+
+  test("causeJson: a failed query records its exception class and the first line of its message") {
+    val cause = new IllegalStateException("star fixpoint not reached in \"2\" rounds\tat cap\nplan:\n+- Scan")
+    assert(Bench.causeJson(cause) ===
+      """{"class":"java.lang.IllegalStateException",""" +
+        """"message":"star fixpoint not reached in \"2\" rounds\tat cap"}""")
+    assert(Bench.causeJson(new RuntimeException()) ===
+      """{"class":"java.lang.RuntimeException","message":""}""")
+    val long = Bench.causeJson(new RuntimeException("x" * 1000))
+    assert(long.contains("\"" + "x" * 300 + "\"}"))
+  }
 }

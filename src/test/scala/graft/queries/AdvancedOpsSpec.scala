@@ -1,9 +1,11 @@
 package graft.queries
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{SparkEntry, TestSpark}
 import graft.operators.Graph
 
 /** PageRank, SCD2, funnel, boilerplate strip, rolling features. */
@@ -372,5 +374,64 @@ class AdvancedOpsSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1))).toMap
     assert(out === Map("url-a" -> "url-a", "url-b" -> "url-a",
       "url-c" -> "url-a", "yy" -> "yy", "zz" -> "yy"))
+  }
+
+  test("connectedComponents matches a driver union-find on a hub, a chain, reversed and duplicate edges") {
+    // hub 2500 with 5,000 leaves on both sides of its own id; a
+    // 300-link chain fed in reversed orientation, reaching the hub
+    // through leaf 4000; duplicates in both orientations; a self-loop
+    // on a chain node and a self-loop-only singleton
+    val hub = (0L to 5000L).filter(_ != 2500L).map(l => (2500L, l))
+    val chain = (10000L until 10300L).map(i => (i + 1, i)) :+ ((10000L, 4000L))
+    val dups = hub.take(100) ++ hub.takeRight(100).map(_.swap) ++ chain.take(50).map(_.swap)
+    val loops = Seq((10100L, 10100L), (30000L, 30000L))
+    val pairs = hub ++ chain ++ dups ++ loops
+    val out = Graph.connectedComponents(pairs.toDF("src", "dst")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+
+    // union-find whose roots are their set's minimum
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    val expected = parent.keys.toSeq.map(n => n -> find(n)).toMap
+
+    assert(out.length === expected.size, "one row per node")
+    assert(out.toMap === expected)
+    assert(expected.values.toSet === Set(0L, 30000L))
+  }
+
+  /** Jobs the session started while `body` ran. The listener bus is
+    * drained before and after, so every job of `body` is counted and
+    * none of an earlier test's. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(listener)
+    started.get
+  }
+
+  test("d16_cc_stars runs at most 40 jobs: one exchange per star step") {
+    // measured at sf0.001: 40 jobs, 4 per contraction round. With each
+    // star step a groupBy min joined back to its input, the query
+    // launched 71.
+    val jobs = jobsDuring {
+      SparkEntry.queries("d16_cc_stars")(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+    }
+    assert(jobs <= 40, s"d16_cc_stars launched $jobs jobs")
   }
 }
