@@ -128,8 +128,8 @@ object EtlMain {
     }
     try {
 
-    // Materialization contract: the ingest runs once (its two passes
-    // over the files, see Ingest), inside the JSONL sink's job, which is
+    // Materialization contract: the ingest runs once (one pass over the
+    // files, see Ingest), inside the JSONL sink's job, which is
     // the first job over `clean`: it fills the `clean` cache and fires
     // both ingest counts. Then the 8 star
     // tables fan out, one task each on a driver pool: a task builds its

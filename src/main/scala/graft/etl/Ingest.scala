@@ -12,10 +12,8 @@ import org.apache.spark.sql.functions._
   * driver round-trip. However many landing files there are, the plan
   * has one file-scan relation (one file index, one codegen subtree),
   * and Spark packs the small files into splits instead of running a
-  * task per file. It is not one pass over the bytes: [[normalize]]
-  * reads the relation in two branches (the doi-dedup window and the
-  * null-doi bypass), and each branch's scan parses every landing file,
-  * so one ingest reads its input twice.
+  * task per file. [[normalize]] dedups through one window over that
+  * one relation, so one ingest parses every landing file once.
   *
   * Every read uses the explicit permissive schema (Schemas.articleSchema)
   * — inference is never on the data path, which at 100 TB also saves a
@@ -85,6 +83,14 @@ object Ingest {
     * website, then a content hash — so which duplicate survives is
     * identical on every run and every partitioning (the same
     * determinism argument as the A3 surrogate keys).
+    *
+    * One window over one scan: the window also partitions by the
+    * content hash when the doi is NULL, so doi-less rows spread over
+    * the window's tasks by hash instead of hashing, every one, to the
+    * single task of the NULL key (a 10% doi-less corpus would put 10%
+    * of 100 TB on one executor). They are all kept whatever their
+    * rank; byte-identical doi-less rows share a hash and a task and
+    * are kept too. Non-NULL dois group exactly by doi.
     */
   def normalize(merged: DataFrame): DataFrame = {
     val withPublisher = merged.withColumn("publisher",
@@ -94,26 +100,22 @@ object Ingest {
           lit("").as("Quartile"),
           col("journal_name").as("name"))))
       .drop("journal_name", "ISSN", "_id")
+      // the hash covers exactly the normalized columns (`*` expands
+      // before `__h` exists)
+      .withColumn("__h", md5(to_json(struct(col("*")))))
     // prefer rows with a quartile (enriched) per doi, then stable doc
-    // order; final content-hash key makes the ordering total (ties =
+    // order; the content hash makes the ordering total (ties =
     // byte-identical rows, which are interchangeable)
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doi")).orderBy(
-      when(col("publisher.Quartile") =!= "", 0).otherwise(1),
-      col("website"),
-      md5(to_json(struct(col("*")))))
-    // NULL-doi rows are exempt (see above) — route them AROUND the
-    // window, not through it: partitionBy hashes every null to the
-    // same task, so a corpus that is 10% doi-less would put 10% of
-    // 100 TB on one executor just to keep rows the filter would pass
-    // anyway. The two branches are disjoint filters over one relation,
-    // each scanning every file.
-    val deduped = withPublisher
-      .filter(col("doi").isNotNull)
+    val w = Window.partitionBy(col("doi"), when(col("doi").isNull, col("__h")))
+      .orderBy(
+        when(col("publisher.Quartile") =!= "", 0).otherwise(1),
+        col("website"),
+        col("__h"))
+    withPublisher
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    deduped.unionByName(withPublisher.filter(col("doi").isNull))
+      .filter(col("doi").isNull || col("__rn") === 1)
+      .drop("__h", "__rn")
   }
 
   /** All landing inputs through one relation, then [[normalize]]. An empty

@@ -107,8 +107,9 @@ object Dictionary {
     * extended dictionary's code column raises on first evaluation when
     * the 1-row audit scalar (count − countDistinct per column, a
     * dictionary-cardinality aggregate broadcast like the max-code
-    * base) finds any of them. No action runs at construction — the
-    * plan stays lazy end-to-end.
+    * base) finds any of them. Construction runs only the NEW-key
+    * rank's jobs ([[Ranking.globalRowNumber]] materializes and counts
+    * its ranges, and what feeds them); the guards stay lazy.
     *
     * Codes stay DENSE (`[0, |old| + |new|)`) but the ordering guarantee
     * weakens by design: within the appended block codes follow key

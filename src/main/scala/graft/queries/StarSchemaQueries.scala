@@ -157,7 +157,7 @@ object StarSchemaQueries {
   /** AN3: quartile bucketing with ntile — account-balance quartiles per
     * nation (the SCImago "Quartile" analytic re-expressed). The engine
     * side uses the two-phase distributed ntile (Ranking.globalNtile:
-    * range partition → local ranks → broadcast offsets), never
+    * range partition → per-range counts → global ranks), never
     * `ntile().over(Window.orderBy(...))`, whose missing partition key
     * moves the whole table into one task's sort — the oracle keeps the
     * plain window form and the outputs agree exactly. */

@@ -473,10 +473,10 @@ object TextPipeline {
     * partitioning, any engine — none of which is true of rand() or of
     * zipWithIndex over an unpinned ordering. Positions come from
     * [[graft.operators.Ranking.globalRowNumber]] (range partition →
-    * local rank → broadcast of ≤ numPartitions offsets), NOT a global
-    * `row_number() OVER (ORDER BY …)` — the oracle keeps that form,
-    * but on Spark it is the move-the-corpus-to-one-task plan that
-    * dies first at 100 TB. doc_id tie-break keeps the order total
+    * ≤ numPartitions per-range counts → offset + position in range),
+    * NOT a global `row_number() OVER (ORDER BY …)` — the oracle keeps
+    * that form, but on Spark it is the move-the-corpus-to-one-task plan
+    * that dies first at 100 TB. doc_id tie-break keeps the order total
     * (md5 collisions aside, it is already injective). */
   val t18EpochShuffle: Q = (s, dir) => {
     import s.implicits._
@@ -2043,9 +2043,9 @@ object TextPipeline {
     * quality (easy→hard export order) with a contiguous global rank
     * and a round-robin shard assignment. The global rank comes from
     * Ranking.globalRowNumber: range-repartition by the sort key, count
-    * per partition, broadcast the ≤32-row offset table — the
-    * scale-correct form of row_number() over an unpartitioned window
-    * (which would funnel the corpus through ONE task). */
+    * per partition, add each range's offset to the row's position in
+    * it — the scale-correct form of row_number() over an unpartitioned
+    * window (which would funnel the corpus through ONE task). */
   val t23Curriculum: Q = (s, dir) => {
     import s.implicits._
     val scored = Tables.load(s, dir, "documents")

@@ -46,13 +46,13 @@ object PlanAudit {
     * that is BOUNDED BY CONSTRUCTION — a relation whose row count is a
     * scalar, |shuffle partitions|, or a fixed top-k, never data-sized.
     * Every entry names its funnel; anything not listed here is a
-    * failure. The dominant source is [[graft.operators.Ranking]]'s
-    * two-phase global rank: its offsets window runs over exactly
-    * |partitions| one-row partials — the whole point of the two-phase
-    * design is that the DATA never visits that single task. */
+    * failure. [[graft.operators.Ranking]]'s two-phase global rank is
+    * not among the sources: its per-range counts reach the driver as
+    * one long per range, so its plans carry no single-partition
+    * exchange. */
   val singlePartitionAllowed: Map[String, String] = Map(
     "a1_count_audit" -> "one-row scalar aggregate merge (|partitions| partials), unpivoted via stack",
-    "a3_surrogate_ids" -> "Ranking.globalRowNumber offsets: |partitions| one-row partials",
+    "a3_surrogate_ids" -> "unpartitioned row_number window over the DISTINCT nation names (|nations| rows: key-cardinality, not data-sized)",
     "a4_profile" -> "three one-row scalar profile aggregates, unioned",
     "a6_dq_audit" -> "single one-row scalar aggregate + stack unpivot (one scan, any constraint count)",
     "an17_triangles" -> "three scalar COUNT aggregates unioned as rows",
@@ -61,32 +61,27 @@ object PlanAudit {
     "an32_skew_report" -> "scalar histogram aggregate + one-row p99 pick (feeds the allowed crossJoins)",
     "c2_quality_gate" -> "one-row threshold scalar aggregate (feeds the allowed crossJoin)",
     "c4_curation_funnel" -> "five per-stage one-row attrition scalars unioned (an17 shape) over already-audited stage operators",
-    "d14_fuzzy_join" -> "globalRowNumber over the distinct VOCAB: offsets window sees |partitions| one-row partials",
-    "j3_type_bridge" -> "token-dim surrogate ids ride globalRowNumber's offsets window",
-    "j15_compat_bridges" -> "eight one-row scalar counts unioned as labeled rows (an17 shape) + globalRowNumber offsets in the default dims",
+    "j15_compat_bridges" -> "eight one-row scalar counts unioned as labeled rows (an17 shape)",
     "s16_compaction" -> "one-row content-preservation scalar (count + key sum) over the compacted output",
     "s17_corrupt_records" -> "one-row quarantine-accounting scalar aggregate",
     "t8_stratified_sample" -> "one-row n_min scalar aggregate (feeds the allowed crossJoin)",
     "u9_time_travel" -> "one-row count + cutoff scalar aggregates (feed the allowed crossJoins)",
-    "an3_ntile" -> "globalNtile offsets window + one-row broadcast total",
-    "an29_decile_lift" -> "inherits an3's globalNtile offsets window",
-    "j2_word_bridge" -> "compat-fanout surrogate ids ride globalRowNumber's offsets window",
+    "an3_ntile" -> "globalNtile's one-row total count (feeds the allowed broadcast crossJoin)",
+    "an29_decile_lift" -> "inherits an3's globalNtile one-row total count",
     "j6_bloom_semijoin" -> "bloom bitmap built by a one-row aggregate (the no-shuffle probe design)",
     "e8_funnel" -> "one-row scalar funnel totals (conversion denominators)",
     "t9_tfidf" -> "one-row corpus-N scalar aggregate",
-    "t12_domain_mix" -> "one-row total for mix shares + globalRowNumber offsets",
-    "t18_epoch_shuffle" -> "two-phase epoch permutation: offsets window over |partitions| partials",
+    "t12_domain_mix" -> "one-row total for mix shares",
     "t19_bigram_lm" -> "one-row vocabulary scalar crossJoin (t9 pattern)",
-    "t23_curriculum" -> "two-phase curriculum order: offsets window over |partitions| partials",
     "t33_bm25" -> "one-row (N, sum dl) stats aggregate",
     "n18_rrf_fusion" -> "inherits t33's one-row stats aggregate; fusion joins two top-50 lists",
-    "an37_dict_distinct" -> "Dictionary.encode = globalRowNumber over the DISTINCT key set: offsets window sees |partitions| one-row partials; + the one-row dict_id identity scalar",
-    "an40_dict_append" -> "two globalRowNumber offsets windows (batch-1 dict + incremental NEW-key rank, both dictionary-cardinality) + one-row identity/audit/max-code/moved-count scalars",
-    "an48_coded_dict_merge" -> "inherits an40's offsets windows and one-row identity/audit scalars (same two-generation encode path, coded sketch tier)",
+    "an37_dict_distinct" -> "Dictionary.encode's one-row dict_id identity scalar over the DISTINCT key set",
+    "an40_dict_append" -> "one-row identity/audit/max-code/moved-count scalars over the batch-1 dict and the incremental NEW-key set (both dictionary-cardinality)",
+    "an48_coded_dict_merge" -> "inherits an40's one-row identity/audit scalars (same two-generation encode path, coded sketch tier)",
     "an44_cms_rollup" -> "one-row corpus-sketch merge (|sources| fixed-size 64 KiB sketches funnel to one row)",
     "an49_cms_probe_multi" -> "an44's one-row corpus-sketch merge + the one-row top-20 key-array collect (both bounded by construction)",
     "an50_kmv_kway" -> "one-row |types| sketch-array collect (key-cardinality, fixed-k sketches — never data-sized)",
-    "an51_coded_churn" -> "inherits an37's Dictionary.encode shapes: globalRowNumber offsets window over the DISTINCT props set + the one-row dict_id identity scalar",
+    "an51_coded_churn" -> "inherits an37's Dictionary.encode shape: the one-row dict_id identity scalar over the DISTINCT props set",
     "an52_dict_audit" -> "auditCodedTier = two one-row aggregates (dictionary stats + sketch-table stats over per-row byte readers) + an37's encode shapes")
 
   /** BroadcastNestedLoopJoin sites where the broadcast side is bounded
@@ -109,7 +104,6 @@ object PlanAudit {
     "n10_pq_codes" -> "per-subspace broadcast k=8 sub-codebooks",
     "n11_pq_adc_topk" -> "per-query LUT build: 3 queries x 8 centroids",
     "n12_ivf_pq" -> "composes n2 + n10's bounded broadcasts",
-    "n13_mmr" -> "bounded candidate set re-ranking",
     "n14_jl_recall" -> "composes n1's exact side + jlTopK's 5-query fan-out",
     "t19_bigram_lm" -> "one-row broadcast vocabulary scalar crossJoin (t9 pattern)",
     "c2_quality_gate" -> "one-row broadcast threshold crossJoin",

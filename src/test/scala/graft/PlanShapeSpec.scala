@@ -66,9 +66,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // finding). Allowed shapes carry a per-query boundedness rationale
     // in PlanAudit.singlePartitionAllowed / bnljAllowed (the single
     // canonical copy the PlanAudit main also prints): one-row scalar
-    // aggregates, |partitions|-row offsets windows of the two-phase
-    // global rank, k-item broadcast fan-outs. CartesianProduct has no
-    // allowlist — never acceptable. e4-family excluded: constructing a
+    // aggregates, key-cardinality totals, k-item broadcast fan-outs.
+    // CartesianProduct has no allowlist — never acceptable. e4-family excluded: constructing a
     // real streaming query returns the memory-sink read plan, not the
     // streaming topology.
     import graft.tools.PlanAudit
@@ -101,10 +100,10 @@ class PlanShapeSpec extends AnyFunSuite {
     val good = graft.operators.Ranking.globalRowNumber(
       spark.read.parquet(s"$sf/orders.parquet"),
       Seq(col("o_orderkey")), "rn")
-    // globalRowNumber's offsets window is the |partitions|-row bounded
-    // funnel — present, but the DATA path never single-partitions:
-    // the final join is hash-partitioned on __pid
-    assert(good.queryExecution.executedPlan.toString.contains("hashpartitioning"))
+    // globalRowNumber reads its offsets from the per-range counts the
+    // call collected: its plan carries no suspect shape at all
+    val goodHits = graft.tools.PlanAudit.scan(good)
+    assert(goodHits.isEmpty, s"the two-phase rank plans a suspect shape: $goodHits")
   }
 
   test("allowlists only name registered queries (no stale entries)") {
@@ -112,6 +111,19 @@ class PlanShapeSpec extends AnyFunSuite {
     val unknown = (PlanAudit.singlePartitionAllowed.keySet ++
       PlanAudit.bnljAllowed.keySet).filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"allowlist entries for unregistered queries: $unknown")
+  }
+
+  test("every allowlisted query still plans the shape it is allowed") {
+    // an entry whose query no longer plans the shape is a rationale
+    // for nothing, and would silently excuse the shape if it returned
+    import graft.tools.PlanAudit
+    val entries = PlanAudit.singlePartitionAllowed.keySet.map(_ -> "Exchange SinglePartition") ++
+      PlanAudit.bnljAllowed.keySet.map(_ -> "BroadcastNestedLoopJoin")
+    val stale = entries.toSeq.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (name, shapes) =>
+      val hits = PlanAudit.scan(SparkEntry.queries(name)(spark, sf))
+      shapes.map(_._2).filterNot(hits.contains).map(s => s"$name: $s")
+    }
+    assert(stale.isEmpty, s"allowlist entries whose query no longer plans the shape:\n${stale.mkString("\n")}")
   }
 
   test("every query result is driver-sortable: no complex types at the top level") {

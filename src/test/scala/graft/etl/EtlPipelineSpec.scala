@@ -40,12 +40,12 @@ class EtlPipelineSpec extends AnyFunSuite {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
     }.size
 
-  test("readMerged plans one scan per normalize branch, whatever the file count") {
+  test("readMerged plans one scan, whatever the file count") {
     val files = EtlFixtures.writeAll(dir)
-    // the doi-dedup window and the null-doi bypass each read the one
-    // multi-path relation; a per-file union would carry 2 × files
-    assert(scanLeaves(Ingest.readMerged(spark, files)) === 2)
-    assert(scanLeaves(Ingest.readMerged(spark, files ++ files)) === 2)
+    // normalize's one window reads the one multi-path relation; a
+    // per-file union would carry one scan per file
+    assert(scanLeaves(Ingest.readMerged(spark, files)) === 1)
+    assert(scanLeaves(Ingest.readMerged(spark, files ++ files)) === 1)
   }
 
   test("readMerged returns the per-file union's rows") {
@@ -203,33 +203,85 @@ class EtlPipelineSpec extends AnyFunSuite {
     assert(norm.count() === 4)                           // dup pair still dedups
   }
 
-  test("normalize routes NULL-doi rows AROUND the window (no single-task skew)") {
-    // every null doi hashes to ONE window partition; at scale a 10%
-    // doi-less corpus would put 10% of the data on one task just to be
-    // kept verbatim. Plan shape: the Window's input subtree must filter
-    // to isnotnull(doi), and the null branch must be window-free.
-    val p = EtlFixtures.write(dir, "nodoi_plan.json",
+  /** The two-branch formulation normalize replaced, kept as the
+    * reference: the doi-dedup window over the non-NULL dois, unioned
+    * with the NULL-doi rows, which bypass it. */
+  private def twoBranch(merged: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col => _, _}
+    val withPublisher = merged.withColumn("publisher",
+      when(col("publisher").isNotNull, col("publisher"))
+        .otherwise(struct(
+          col("ISSN").as("ISSN"),
+          lit("").as("Quartile"),
+          col("journal_name").as("name"))))
+      .drop("journal_name", "ISSN", "_id")
+    val w = Window.partitionBy(col("doi")).orderBy(
+      when(col("publisher.Quartile") =!= "", 0).otherwise(1),
+      col("website"),
+      md5(to_json(struct(col("*")))))
+    withPublisher
+      .filter(col("doi").isNotNull)
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .drop("__rn")
+      .unionByName(withPublisher.filter(col("doi").isNull))
+  }
+
+  test("normalize keeps the two-branch reference's survivors") {
+    // distinct NULL-doi rows, a byte-identical NULL-doi pair (both
+    // kept), an ""-doi pair (deduped), an enriched-over-raw pair and a
+    // tie on tier and website that only the content hash breaks
+    val p = EtlFixtures.write(dir, "survivors.json",
       """[
         |{"title": "NoDoi One", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
-        |{"title": "WithDoi", "doi": "https://doi.org/10.1109/z9", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"}
+        |{"title": "NoDoi Two", "topic": "IoT", "website": "Science Direct", "journal_name": "J2"},
+        |{"title": "NoDoi Twin", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
+        |{"title": "NoDoi Twin", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
+        |{"title": "Empty A", "doi": "", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
+        |{"title": "Empty B", "doi": "", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
+        |{"title": "Raw", "doi": "https://doi.org/10.1109/e1", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
+        |{"title": "Enriched", "doi": "https://doi.org/10.1109/e1", "topic": "AI", "website": "IEEE Xplore", "publisher": {"name": "J1", "ISSN": "12345678", "Quartile": "Q2"}},
+        |{"title": "Tie A", "doi": "https://doi.org/10.1109/t2", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"},
+        |{"title": "Tie B", "doi": "https://doi.org/10.1109/t2", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"}
         |]""".stripMargin)
-    val norm = Ingest.normalize(Ingest.readArticles(spark, p))
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val opt = norm.queryExecution.optimizedPlan
-    val windows = opt.collect { case w: LWindow => w }
-    assert(windows.size === 1, s"expected exactly one window branch:\n$opt")
-    assert(windows.head.exists {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.exists {
-          case org.apache.spark.sql.catalyst.expressions.IsNotNull(a) =>
-            a.references.map(_.name).toSeq.contains("doi")
-          case _ => false
-        }
-      case _ => false
-    }, s"window must consume only doi-not-null rows:\n${windows.head}")
-    // and the output is still exactly right
-    assert(norm.count() === 2)
-    assert(norm.filter(col("doi").isNull).count() === 1)
+    val raw = Ingest.readArticles(spark, p)
+    val norm = Ingest.normalize(raw)
+    assert(rowMultiset(norm) === rowMultiset(twoBranch(raw)))
+    assert(norm.filter(col("doi").isNull).count() === 4)
+    assert(norm.filter(col("doi") === "").count() === 1)
+    val e1 = norm.filter(col("doi").endsWith("e1")).select("title").collect().map(_.getString(0))
+    assert(e1.toSeq === Seq("Enriched"))
+    assert(norm.count() === 7)
+    // every layout gives the same survivors
+    for (d <- Seq(raw.repartition(5), raw.coalesce(1)))
+      assert(rowMultiset(Ingest.normalize(d)) === rowMultiset(norm))
+  }
+
+  test("normalize spreads NULL-doi rows over the window's tasks") {
+    // a window partitioned by doi alone hashes every NULL doi to ONE
+    // task: at scale a 10% doi-less corpus would put 10% of the data
+    // on one executor. The rows keep the window's partitioning up to
+    // the output (the keep-filter is narrow), so spark_partition_id
+    // there is the window-input task of each row.
+    val rows = (1 to 1000).map(i =>
+      s"""{"title": "NoDoi $i", "topic": "AI", "website": "IEEE Xplore", "journal_name": "J1"}""")
+    val p = EtlFixtures.write(dir, "nodoi_spread.json", rows.mkString("[\n", ",\n", "\n]"))
+    val confs = Seq("spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val tasks = Ingest.normalize(Ingest.readArticles(spark, p))
+        .select(org.apache.spark.sql.functions.spark_partition_id().as("task"))
+        .collect().map(_.getInt(0))
+      assert(tasks.length === 1000) // every NULL-doi row survives
+      val perTask = tasks.groupBy(identity).map { case (t, ts) => t -> ts.length }
+      assert(perTask.values.max < 500, s"rows per window task: $perTask")
+    } finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("normalize survivor choice is deterministic across partitionings") {
