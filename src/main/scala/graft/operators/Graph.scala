@@ -1,8 +1,16 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.RowsBridge
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Distributed graph analytics on edge lists — the iterate-by-join
   * pattern (one key shuffle per iteration) that scales PageRank-style
@@ -163,50 +171,68 @@ object Graph {
     * be long paths (URL redirect chains, citation chains, linked-page
     * graphs), not the tiny cliques near-dup graphs produce.
     *
+    *  - local pass: before the first round, each input partition runs
+    *    a union-find over its own pairs ([[localStars]]) and emits its
+    *    components as stars on their local minima — a map-side
+    *    pre-contraction, the partial aggregate of the rounds below;
     *  - large-star(u): every neighbor v > u re-attaches to
     *    m = min(Γ(u) ∪ u);
     *  - small-star(u): orient edges toward the larger endpoint; every
     *    smaller neighbor (and u itself) re-attaches to the minimum.
     *
-    * Each operation is ONE keyed exchange: a min OVER a window
+    * Each star operation is ONE keyed exchange: a min OVER a window
     * partitioned by the node, the paper's one reducer per node — no
-    * join back to the input, no driver state. Edge weights only ever
-    * decrease, so the (count, hash-sum) fingerprint is a sound
-    * fixpoint test (the d6 label-sum discipline). At convergence every
-    * component is a star centered on its minimum node: labels read off
-    * as min(self, neighbors). Nodes compare with their column's own
-    * ordering — string keys work, ids are never cast.
+    * join back to the input, no driver state. The local pass needs no
+    * exchange at all, and it is duplicate-insensitive, so the input is
+    * never `distinct`ed. Edge weights only ever decrease, so the
+    * (count, hash-sum) fingerprint is a sound fixpoint test (the d6
+    * label-sum discipline). At convergence every component is a star
+    * centered on its minimum node: labels read off as min(self,
+    * neighbors). Nodes compare with their column's own ordering —
+    * string keys work, ids are never cast.
     *
     * Scale posture: shuffles are sized to the GRAPH (dupClusters'
     * repartition discipline: ~1M edges/partition, never corpus
     * parallelism); each round moves only the current edge relation,
     * which contraction SHRINKS round over round, through three
     * exchanges (large-star window, small-star window, terminal
-    * repartition). The large-star window sends a node's whole
-    * neighbourhood to one task; its row buffer spills, so a hub's task
-    * stays memory-bounded (SCALING.md). localCheckpoint per round
-    * bounds lineage. Output: (node, component), component = the
-    * component's minimum node id.
+    * repartition). A component that one input partition holds whole
+    * leaves the local pass finished, so a graph whose partitions
+    * hold whole components stops after one confirming round. The
+    * local pass holds a bounded number of nodes per task, and the
+    * large-star window's row buffer spills, so a hub's task stays
+    * memory-bounded (SCALING.md). localCheckpoint per round bounds
+    * lineage. Output: (node, component), component = the component's
+    * minimum node id.
     *
     * Input `pairs`: (src, dst) — undirected, duplicates and self-loops
     * tolerated. Ids must be non-null. */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
-    // ONE job before the loop: the distinct input pairs, self-loops
-    // included, are checkpointed once. The edge count rides that job as
-    // an Observation, and both the loop's edge set and the node set
-    // derive from the checkpoint. Nodes come from the RAW pairs: a node
-    // appearing only as (x, x) is a singleton component and must still
-    // get its output row (dupClusters parity) — and star edges at
-    // convergence don't mention every input pairing anyway.
-    val edgeCount = Observation()
-    val pIn = pairs.select(col("src").as("a"), col("dst").as("b")).distinct()
-      .observe(edgeCount, count(when(col("a") =!= col("b"), lit(1))).as("n"))
+    // the convergence fingerprint: count and xxhash-sum of the a ≠ b
+    // rows. In the loop every row is an edge; in the local pass's
+    // output the (root, root) rows are skipped.
+    val isEdge = col("a") =!= col("b")
+    def fingerprinted(df: DataFrame, obs: Observation): DataFrame =
+      df.observe(obs, count(when(isEdge, lit(1))).as("n"),
+        sum(when(isEdge, xxhash64(col("a"), col("b"))).cast("decimal(38,0)")).as("h"))
+    def fingerprint(obs: Observation): (Long, java.math.BigDecimal) =
+      (obs.get("n").asInstanceOf[Long], obs.get("h").asInstanceOf[java.math.BigDecimal])
+
+    // Before the loop: ONE job, no exchange. The local pass's (node,
+    // root) rows are checkpointed once, with their fingerprint riding
+    // that job as an Observation. The loop's edges are the a ≠ b rows;
+    // the node set is every `a`, because each node the input mentions
+    // emits one row — a node appearing only as (x, x) is a singleton
+    // component and still gets its output row (dupClusters parity).
+    // The loop starts from the local pass's fingerprint, so an input
+    // the pass already reduced to stars stops after round 1.
+    val localObs = Observation()
+    val local = fingerprinted(localStars(pairs, LocalNodeBudget), localObs)
       .localCheckpoint()
-    val nEdges = edgeCount.get("n").asInstanceOf[Long]
-    val p0 = pIn.filter(col("a") =!= col("b"))
-    val nodes = pIn.select(col("a").as("node"))
-      .unionByName(pIn.select(col("b").as("node"))).distinct()
-    val sessParts = pIn.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    var prev = fingerprint(localObs)
+    val nEdges = prev._1
+    val nodes = local.select(col("a").as("node")).distinct()
+    val sessParts = local.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val nParts = math.max(1L,
       math.min(sessParts.toLong, nEdges / 1000000L + 1L)).toInt
 
@@ -232,12 +258,11 @@ object Graph {
       e.select(greatest(col("a"), col("b")).as("c"), least(col("a"), col("b")).as("w"))
         .withColumn("m", min(col("w")).over(Window.partitionBy(col("c"))))
         .select(explode(array(col("w"), col("c"))).as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b"))
+        .filter(isEdge)
         .repartition(nParts, col("a"))
         .dropDuplicates("a", "b")
 
-    var e = p0.repartition(nParts, col("a"))
-    var prev = (-1L, null.asInstanceOf[java.math.BigDecimal])
+    var e = local.filter(isEdge)
     var r = 0
     var done = false
     while (!done && r < maxRounds) {
@@ -246,15 +271,9 @@ object Graph {
       // materialization job as an Observation. Under AQE each of the
       // round's three exchanges is its own job, so a round is 4 jobs.
       val obs = Observation()
-      e = smallStar(largeStar(e))
-        .observe(obs, count(lit(1)).as("n"),
-          sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)")).as("h"))
-        .localCheckpoint()
-      val fp = (Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L),
-        obs.get("h").asInstanceOf[java.math.BigDecimal])
-      done = fp._1 == prev._1 &&
-        ((fp._2 == null && prev._2 == null) ||
-          (fp._2 != null && fp._2 == prev._2))
+      e = fingerprinted(smallStar(largeStar(e)), obs).localCheckpoint()
+      val fp = fingerprint(obs)
+      done = fp == prev
       prev = fp
       r += 1
     }
@@ -262,13 +281,18 @@ object Graph {
     // without the fingerprint fixpoint has NOT computed connected
     // components — labels from a non-converged edge set silently split
     // components. An exactness-everywhere engine fails loudly instead;
-    // the measured curves (SCALING.md: <=12 rounds on 4096-link
-    // chains, O(log^2) by Kiveris et al.) make the default cap
-    // generous for any realistic topology, so tripping this means the
-    // caller should raise maxRounds, not that the algorithm stalled.
+    // the measured curves (SCALING.md: 13 rounds, the last one
+    // confirming, on a 4096-link chain the local pass cannot shorten;
+    // O(log^2) by Kiveris et al.) make the default cap generous for
+    // any realistic topology, so tripping this means the caller should
+    // raise maxRounds, not that the algorithm stalled. The local pass
+    // never changes the components, only how many rounds remain: when
+    // it already left stars on the component minima, round 1 is the
+    // fixpoint, because the local pass's fingerprint is the first one
+    // round 1 is compared with.
     if (!done) throw new IllegalStateException(
       s"connectedComponents did not reach the star fixpoint in $maxRounds rounds " +
-        s"(${nEdges} input edges) — raise maxRounds")
+        s"(${nEdges} edges after the per-partition local pass) — raise maxRounds")
     // at the fixpoint E is a union of stars: component = min over
     // self ∪ neighbors (centers have only larger neighbors → self)
     val nb = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
@@ -277,4 +301,89 @@ object Graph {
       .select(col("node"),
         least(col("node"), coalesce(col("mn"), col("node"))).as("component"))
   }
+
+  /** Nodes one task of the local pass holds before it flushes. A node
+    * costs about 150 bytes of heap (key row, map entry, parent slot)
+    * plus its key's bytes: some 20 MB per task for long ids. */
+  private val LocalNodeBudget = 1 << 17
+
+  /** The local pass of [[connectedComponents]]: a union-find over each
+    * input partition's (src, dst) pairs, with no exchange. Output:
+    * (a, b) = (node, root), one row per node the partition saw, root =
+    * the node's local component minimum under Spark's ordering for the
+    * column's type (strings compare as UTF-8 bytes, like `least` and
+    * `min`); a root emits (root, root). Both columns take the type
+    * `least(src, dst)` resolves to.
+    *
+    * Each partition replaces its pairs by a forest with the same
+    * components, so the output has exactly the input's components,
+    * whatever the layout; duplicates and self-loops cost nothing. A
+    * task holds at most `budget` + 1 nodes: when its map fills, it
+    * emits its stars and starts again. That flush is sound for the
+    * same reason — every pair lies inside one flush — at the price of
+    * a node being emitted once per flush that saw it. */
+  private[graft] def localStars(pairs: DataFrame, budget: Int): DataFrame = {
+    require(budget >= 1, s"localStars: budget must be >= 1, got $budget")
+    val t = pairs.select(least(col("src"), col("dst"))).schema.head.dataType
+    val ab = pairs.select(col("src").cast(t).as("a"), col("dst").cast(t).as("b"))
+    val nullable = ab.schema.exists(_.nullable)
+    val schema = StructType(Seq(StructField("a", t, nullable), StructField("b", t, nullable)))
+    val rows = ab.queryExecution.toRdd.mapPartitions(new LocalForest(_, t, budget))
+    RowsBridge.dataFrame(ab.sparkSession, rows, schema)
+  }
+}
+
+/** [[Graph.localStars]]' per-partition union-find. Node keys are
+  * one-field UnsafeRows — byte equality, any orderable type — copied
+  * out of the projections' reused rows. A union hangs the larger root
+  * under the smaller one, so every root is its set's minimum. */
+private final class LocalForest(in: Iterator[InternalRow], t: DataType, budget: Int)
+    extends Iterator[InternalRow] {
+  private val keyOf = Array(0, 1).map(i =>
+    UnsafeProjection.create(Seq(BoundReference(i, t, nullable = true))))
+  private val ord = LazilyGeneratedOrdering.forSchema(new StructType().add("k", t))
+  private val index = new java.util.HashMap[UnsafeRow, Integer]
+  private val keys = new ArrayBuffer[UnsafeRow]
+  private var parent = new Array[Int](64)
+  private var out: Iterator[InternalRow] = Iterator.empty
+
+  private def id(k: UnsafeRow): Int = {
+    val i = index.get(k)
+    if (i != null) i
+    else {
+      val n = keys.length
+      val owned = k.copy()
+      keys += owned
+      index.put(owned, n)
+      if (n == parent.length) parent = java.util.Arrays.copyOf(parent, 2 * n)
+      parent(n) = n
+      n
+    }
+  }
+
+  private def find(x: Int): Int = {
+    var y = x
+    while (parent(y) != y) { parent(y) = parent(parent(y)); y = parent(y) }
+    y
+  }
+
+  // reads pairs until the map holds `budget` nodes or the input ends,
+  // then hands out one (node, root) row per node
+  private def fill(): Unit = {
+    index.clear()
+    keys.clear()
+    while (in.hasNext && keys.length < budget) {
+      val row = in.next()
+      val a = find(id(keyOf(0)(row)))
+      val b = find(id(keyOf(1)(row)))
+      if (a != b) {
+        if (ord.compare(keys(a), keys(b)) <= 0) parent(b) = a else parent(a) = b
+      }
+    }
+    out = Iterator.tabulate(keys.length)(i =>
+      new GenericInternalRow(Array[Any](keys(i).get(0, t), keys(find(i)).get(0, t))))
+  }
+
+  override def hasNext: Boolean = out.hasNext || (in.hasNext && { fill(); out.hasNext })
+  override def next(): InternalRow = if (hasNext) out.next() else Iterator.empty.next()
 }

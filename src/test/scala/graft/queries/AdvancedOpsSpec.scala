@@ -297,11 +297,46 @@ class AdvancedOpsSpec extends AnyFunSuite {
 
   // ---- Graph.connectedComponents (d16: alternating star contraction) --
 
-  test("connectedComponents: long chain collapses to its min in logarithmic rounds") {
+  /** `links` over `parts` partitions, link i in partition i % parts:
+    * no partition holds two adjacent links of a chain, so the local
+    * pass contracts nothing and the star rounds do all the work. */
+  private def interleaved(links: Seq[(Long, Long)], parts: Int) = {
     import spark.implicits._
+    spark.sparkContext.parallelize(0 until parts, parts)
+      .flatMap(p => links.indices.filter(_ % parts == p).map(links))
+      .toDF("src", "dst")
+  }
+
+  /** A driver-side union-find whose roots are their set's minimum:
+    * node → component label, one entry per node `pairs` mentions. */
+  private def driverComponents(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    parent.keys.toSeq.map(n => n -> find(n)).toMap
+  }
+
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows.map(_._1).distinct.length === rows.length, "one row per node")
+    rows.toMap
+  }
+
+  test("connectedComponents: long chain collapses to its min in logarithmic rounds") {
     // a 200-link chain is the min-label worst case (~100 propagation
-    // rounds); star contraction must finish inside 12 alternations
-    val edges = (0L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
+    // rounds); star contraction must finish inside 12 alternations.
+    // Interleaved over 8 partitions, the local pass leaves the chain
+    // whole for the rounds.
+    val edges = interleaved((0L until 200L).map(i => (i, i + 1)), 8)
     val out = Graph.connectedComponents(edges, maxRounds = 12).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(out.length === 201)
@@ -309,15 +344,18 @@ class AdvancedOpsSpec extends AnyFunSuite {
   }
 
   test("connectedComponents fails LOUDLY at the round cap instead of returning split components (r10 contract)") {
-    import spark.implicits._
     // a 64-link chain cannot reach the star fixpoint in 2 alternations:
     // pre-r10 the loop returned the truncated (wrong) labels silently —
-    // the caller could not tell a converged result from a partial one
-    val edges = (0L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
+    // the caller could not tell a converged result from a partial one.
+    // Interleaved, so the local pass cannot collapse it before round 1.
+    val edges = interleaved((0L until 64L).map(i => (i, i + 1)), 8)
     val e = intercept[IllegalStateException] {
       Graph.connectedComponents(edges, maxRounds = 2)
     }
     assert(e.getMessage.contains("fixpoint") && e.getMessage.contains("maxRounds"))
+    // the local pass re-orients each link as (node, root) and
+    // contracts nothing: 64 edges left for the rounds
+    assert(e.getMessage.contains("(64 edges after the per-partition local pass)"), e.getMessage)
     // and the same graph under a sufficient cap converges fine
     val ok = Graph.connectedComponents(edges, maxRounds = 12).collect()
     assert(ok.length === 65 && ok.forall(_.getLong(1) === 0L))
@@ -386,27 +424,94 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val dups = hub.take(100) ++ hub.takeRight(100).map(_.swap) ++ chain.take(50).map(_.swap)
     val loops = Seq((10100L, 10100L), (30000L, 30000L))
     val pairs = hub ++ chain ++ dups ++ loops
-    val out = Graph.connectedComponents(pairs.toDF("src", "dst")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-
-    // union-find whose roots are their set's minimum
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
-      var y = x
-      while (y != r) { val next = parent(y); parent(y) = r; y = next }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(ra max rb) = ra min rb
-    }
-    val expected = parent.keys.toSeq.map(n => n -> find(n)).toMap
-
-    assert(out.length === expected.size, "one row per node")
-    assert(out.toMap === expected)
+    val out = labels(Graph.connectedComponents(pairs.toDF("src", "dst")))
+    val expected = driverComponents(pairs)
+    assert(out === expected)
     assert(expected.values.toSet === Set(0L, 30000L))
+  }
+
+  // ---- the local pass (per-partition union-find before round 1) ------
+
+  test("connectedComponents matches a driver union-find under every input layout") {
+    import spark.implicits._
+    // random graphs with duplicates in both orientations and a
+    // self-loop-only singleton, laid out on one partition, round-robin
+    // over 8, hashed on src; plus a chain no partition holds two
+    // adjacent links of
+    val rnd = new scala.util.Random(16)
+    (1 to 3).foreach { g =>
+      val edges = Seq.fill(400)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      val pairs = edges ++ edges.take(60).map(_.swap) ++ edges.slice(100, 140) :+ ((999L, 999L))
+      val expected = driverComponents(pairs)
+      val df = pairs.toDF("src", "dst")
+      Seq("one partition" -> df.repartition(1), "round-robin over 8" -> df.repartition(8),
+          "hashed on src" -> df.repartition(8, $"src")).foreach { case (layout, in) =>
+        assert(labels(Graph.connectedComponents(in)) === expected, s"graph $g, $layout")
+      }
+    }
+    val chain = (0L until 300L).map(i => if (i % 2 == 0) (i, i + 1) else (i + 1, i))
+    assert(labels(Graph.connectedComponents(interleaved(chain, 8))) === driverComponents(chain))
+  }
+
+  test("connectedComponents: the same pairs in every partition, and a self-loop-only singleton") {
+    import spark.implicits._
+    // every partition holds the same triangle and pair in both
+    // orientations: each emits the same stars, and the labels and the
+    // one row per node must not see the copies
+    val block = Seq((3L, 1L), (1L, 2L), (2L, 3L), (8L, 9L)).flatMap(p => Seq(p, p.swap))
+    val df = spark.sparkContext.parallelize(0 until 8, 8)
+      .flatMap(p => if (p == 5) block :+ ((42L, 42L)) else block)
+      .toDF("src", "dst")
+    assert(labels(Graph.connectedComponents(df)) ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 8L -> 8L, 9L -> 8L, 42L -> 42L))
+  }
+
+  test("connectedComponents: a partition holding whole components converges in one round") {
+    // the local pass leaves the stars the first round only confirms;
+    // a one-round cap must not trip
+    val chain = (0L until 200L).map(i => (i + 1, i)) ++ (500L until 520L).map(i => (i, i + 1))
+    val one = interleaved(chain, 1)
+    assert(labels(Graph.connectedComponents(one, maxRounds = 1)) === driverComponents(chain))
+  }
+
+  test("connectedComponents: string roots follow Spark's UTF-8 order, not UTF-16") {
+    import spark.implicits._
+    // U+FFFD sorts after U+1F600 in UTF-16 code units (0xFFFD > 0xD83D)
+    // and before it in UTF-8 bytes (EF < F0); Spark's min picks U+FFFD.
+    // A local pass choosing roots by java.lang.String order would emit
+    // stars the first round re-orients, and the one-round cap would trip.
+    val (rep, emoji) = ("\uFFFD", "\uD83D\uDE00")
+    val pairs = Seq((emoji, rep), (emoji + "x", emoji), ("a" + emoji, "a" + rep))
+    val df = pairs.toDF("src", "dst").repartition(1)
+    val out = Graph.connectedComponents(df, maxRounds = 1).collect()
+      .map(r => (r.getString(0), r.getString(1))).toMap
+    val sparkMin = Seq(rep, emoji).toDF("s").agg(min($"s")).head().getString(0)
+    assert(sparkMin === rep)
+    assert(out === Map(rep -> sparkMin, emoji -> sparkMin, (emoji + "x") -> sparkMin,
+      ("a" + emoji) -> ("a" + rep), ("a" + rep) -> ("a" + rep)))
+  }
+
+  test("localStars: a small node budget flushes, and the components survive") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val pairs = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong)) :+ ((500L, 500L))
+    val df = pairs.toDF("src", "dst").repartition(2)
+    val expected = driverComponents(pairs)
+    Seq(1, 4, 16, 1 << 17).foreach { budget =>
+      val stars = Graph.localStars(df, budget).collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(stars.forall { case (node, root) => root <= node }, s"budget $budget: roots are minima")
+      // stars, not deeper trees: every node a row names as its root
+      // emits its own (root, root) row
+      val roots = stars.collect { case (n, r) if n == r => n }.toSet
+      assert(stars.forall { case (_, root) => roots(root) }, s"budget $budget: not stars")
+      assert(stars.map(_._1).toSet === expected.keySet, s"budget $budget: a row per node")
+      // a node seen by several flushes is emitted once by each
+      if (budget < 16) assert(stars.length > 2 * expected.size, s"budget $budget: no flush happened")
+      assert(driverComponents(stars.toSeq) === expected, s"budget $budget: components changed")
+      // the flushed stars are a valid input of their own
+      assert(labels(Graph.connectedComponents(stars.toSeq.toDF("src", "dst").repartition(2))) ===
+        expected, s"budget $budget")
+    }
   }
 
   /** Jobs the session started while `body` ran. The listener bus is
@@ -424,14 +529,19 @@ class AdvancedOpsSpec extends AnyFunSuite {
     started.get
   }
 
-  test("d16_cc_stars runs at most 40 jobs: one exchange per star step") {
-    // measured at sf0.001: 40 jobs, 4 per contraction round. With each
-    // star step a groupBy min joined back to its input, the query
-    // launched 71.
-    val jobs = jobsDuring {
-      SparkEntry.queries("d16_cc_stars")(spark, sf)
-        .write.format("noop").mode("overwrite").save()
-    }
-    assert(jobs <= 40, s"d16_cc_stars launched $jobs jobs")
+  test("d16_cc_stars runs at most 12 jobs, 6 at construction") {
+    // measured at sf0.001: 6 jobs build the query (among them the
+    // local pass's checkpoint and one star round of 4 jobs) and 6 run
+    // it. Each partition of d16's input holds whole components, so
+    // the local pass leaves the final stars and the one round only
+    // confirms them. With the distinct input checkpointed and 8 rounds
+    // to the fixpoint the query launched 40; with each star step a
+    // groupBy min joined back to its input, 71.
+    var q: org.apache.spark.sql.DataFrame = null
+    val built = jobsDuring { q = SparkEntry.queries("d16_cc_stars")(spark, sf) }
+    val ran = jobsDuring { q.write.format("noop").mode("overwrite").save() }
+    info(s"$built jobs at construction, $ran at execution")
+    assert(built <= 6, s"d16_cc_stars launched $built jobs at construction")
+    assert(built + ran <= 12, s"d16_cc_stars launched ${built + ran} jobs")
   }
 }
