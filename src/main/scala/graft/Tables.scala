@@ -1,11 +1,37 @@
 package graft
 
+import java.io.{FileNotFoundException, IOException}
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   * One parquet file per table under `\$sfDir/<name>.parquet`.
+  *
+  * Each load reads its table's schema on the driver, from the parquet
+  * footer, and hands it to the reader. Without a schema
+  * `spark.read.parquet` infers one with a one-task Spark job that reads
+  * that same footer; in a warm 4-core local session the job and its
+  * scheduling gap cost 70–100 ms per load, and j1's four loads were
+  * its whole construction time. The footer is converted by Spark's own
+  * [[ParquetToSparkSchemaConverter]] over the session's conf, so the
+  * timestamp, binary and int96 settings, and the Spark row-metadata
+  * key a Spark writer leaves, give the types inference gives.
+  *
+  * A directory (a Spark-written table) is read as Spark's non-merging
+  * inference reads it: the footer of `_common_metadata`, else of
+  * `_metadata`, else of the first data file by path; hidden files,
+  * `_SUCCESS` and checksum files are not data files. A missing table, a
+  * directory without a data file, or a corrupt footer throws, naming
+  * the path.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -14,8 +40,9 @@ object Tables {
 
   /** events.parquet's `ts` physical type has drifted across generator
     * versions: TIMESTAMP(NANOS) (rejected by Spark's reader outright —
-    * read via the legacy nanos-as-long escape hatch), then
-    * timestamp[us] with isAdjustedToUTC=false (read as TIMESTAMP_NTZ,
+    * read via the legacy nanos-as-long escape hatch, set before the
+    * footer is converted), then timestamp[us] with
+    * isAdjustedToUTC=false (read as TIMESTAMP_NTZ,
     * which `unix_micros`/`window`/watermarks all reject). Normalize
     * every variant to a microsecond TimestampType here so downstream
     * operators see one stable type. The NTZ→TIMESTAMP cast is exact:
@@ -23,43 +50,52 @@ object Tables {
     * the wall-clock micros are reinterpreted 1:1 as UTC instants —
     * identical to what DuckDB's epoch_us sees on the same file.
     */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      raw.schema("ts").dataType match {
-        case LongType =>
-          raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case TimestampNTZType =>
-          raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => raw
-      }
-    } else {
-      spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = spark.read.schema(footerSchema(spark, path)).parquet(path)
+    if (name != "events") raw
+    else raw.schema("ts").dataType match {
+      case LongType =>
+        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType =>
+        raw.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => raw
     }
+  }
 
-  /** [[load]] + a GUARDED round-robin repartition to the session's
-    * shuffle parallelism — for queries whose per-row map work
-    * (tokenize + window-hash explodes, per-pair vector math) dominates
-    * the scan. The testdata tables are ONE parquet file with ONE row
-    * group, and a parquet row group is the atomic read unit, so every
-    * scan is a single task — and whole-stage codegen fuses all
-    * downstream per-row expressions into that stage: the guide-§2.5
-    * "unsplittable input" shape, measured as ~2 s of one-core CPU
-    * inside t30 while 31 cores idled. The repartition moves the raw
-    * column bytes once (cheap — these are the narrow projected
-    * columns) so the expensive map work runs at full parallelism.
-    * Parallelism comes from spark.sql.shuffle.partitions — never a
-    * constant — so the shape adapts to the session.
-    *
-    * SCALE GUARD (r14, verdict item 3): the spread only fires when the
-    * scan's own partition count is well under the session's shuffle
-    * parallelism (< half). A 100 TB corpus laid out in splittable
-    * files already scans at full parallelism, and an unconditional
-    * repartition there would shuffle the raw corpus bytes for nothing
-    * — the spread is a repair for unsplittable inputs, not a default.
-    * The partition count comes from the scan's planned RDD (file
-    * splits — no job runs). */
+  /** The Spark schema of the parquet table at `path`, from one footer
+    * read on the driver with its row groups skipped (see [[Tables]]). */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val st = fs.getFileStatus(root)
+    val file = if (st.isFile) st else schemaFile(fs.listStatus(root)).getOrElse(
+      throw new FileNotFoundException(s"no parquet data file in the table directory $path"))
+    try {
+      val md = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, md),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    } catch {
+      case NonFatal(e) =>
+        throw new IOException(s"cannot read the parquet schema of ${file.getPath}", e)
+    }
+  }
+
+  /** The file of a table directory whose footer Spark's non-merging
+    * schema inference reads (`ParquetUtils.inferSchema`). */
+  private def schemaFile(entries: Array[FileStatus]): Option[FileStatus] = {
+    val files = entries.filter(_.isFile).sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    def isData(n: String) =
+      !n.startsWith("_") && !n.startsWith(".") && !n.endsWith("._COPYING_")
+    named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(files.find(f => isData(f.getPath.getName)))
+  }
+
   /** Total on-disk bytes of the testdata tables under `sfDir` — the
     * input-scale signal [[derivedShuffleParts]] reads. Missing files
     * count 0, so a partial directory degrades gracefully. */
@@ -104,6 +140,24 @@ object Tables {
     math.min(math.max(floor, byData), cap).toInt
   }
 
+  /** [[load]] + a guarded round-robin repartition to the session's
+    * shuffle parallelism, for queries whose per-row map work
+    * (tokenize + window-hash explodes, per-pair vector math) dominates
+    * the scan. A testdata table is one parquet file with one row
+    * group, and a row group is parquet's atomic read unit, so its scan
+    * is a single task, and whole-stage codegen fuses every downstream
+    * per-row expression into that task: t30 once spent ~2 s of
+    * one-core CPU there while 31 cores idled. The repartition moves the
+    * narrow projected columns once so the expensive map work runs at
+    * full parallelism. Parallelism comes from
+    * `spark.sql.shuffle.partitions`, never a constant.
+    *
+    * Scale guard: the spread fires only when the scan's own partition
+    * count is under half the shuffle parallelism. A 100 TB corpus laid
+    * out in splittable files already scans at full parallelism, and a
+    * repartition there would shuffle the raw corpus for nothing. The
+    * partition count comes from the scan's planned file splits; no job
+    * runs. */
   def loadSpread(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = load(spark, sfDir, name)
     val shuffleParts =

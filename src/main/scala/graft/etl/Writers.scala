@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * the reference's SQL INSERT generator (DB/iqueries generator.py:4-48)
   * semantics — NULL for missing, numbers verbatim via their string
   * form, `'` doubled inside quoted strings — as a codegen'd projection
-  * writing text files, not a pandas loop. K1, the scraper's
+  * writing one text file per table, not a pandas loop. K1, the scraper's
   * single-file JSON-array format, is a small driver-side writer kept
   * for byte-format parity only (it is inherently single-file).
   */
@@ -60,9 +60,13 @@ object Writers {
       lit(");")).as("stmt"))
   }
 
-  /** K6: write the INSERT script as distributed text parts. */
+  /** K6: write the INSERT script as one text file per table, as the
+    * reference's generator writes one `.sql` file per table under
+    * `DB/queries`; a 6-row dim is one file, not one part per partition
+    * of its ranked input. `coalesce(1)` is narrow: one task formats the
+    * rows of every input partition in order, with no shuffle. */
   def writeInsertScript(df: DataFrame, table: String, path: String): Unit =
-    insertStatements(df, table).write.mode("overwrite").text(path)
+    insertStatements(df, table).coalesce(1).write.mode("overwrite").text(path)
 
   /** K1/K2: the scraper's single-file JSON array (pretty-printed
     * records, comma-separated, wrapped in [ ]). Reference-parity

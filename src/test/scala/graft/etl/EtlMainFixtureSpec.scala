@@ -165,6 +165,8 @@ class EtlMainFixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(csv(s"$out/csv/$name").count() === n, s"csv/$name")
         assert(spark.read.text(s"$out/sql/$name")
           .filter(col("value").startsWith(s"INSERT INTO $name (")).count() === n, s"sql/$name")
+        assert(new File(s"$out/sql/$name").list().count(_.startsWith("part-")) === 1,
+          s"sql/$name is one file")
       }
       assert(spark.read.text(s"$out/clean_jsonl").count() === Expected.clean.size.toLong)
       // every bridge id resolves against the dim CSV written in this run

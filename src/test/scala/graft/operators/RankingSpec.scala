@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -142,28 +140,13 @@ class RankingSpec extends AnyFunSuite {
     assert(ids === first)
   }
 
-  /** Jobs the session started while `body` ran. The listener bus is
-    * drained before and after, so every job of `body` is counted and
-    * none of an earlier test's. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain.drain(sc) } finally sc.removeSparkListener(listener)
-    started.get
-  }
-
   test("globalRowNumber plus its first action runs at most 4 jobs") {
     // measured: 4 — the range sampling, the range exchange's map
     // stage, the count job that materializes the pinned ranges, and
     // the action's job over them. With the counts aggregated and
     // joined back to the ranges as offsets, the call and its first
     // action ran 7.
-    val jobs = jobsDuring {
+    val jobs = TestSpark.jobsDuring {
       Ranking.globalRowNumber(df, Seq($"k", $"id"), "rn")
         .write.format("noop").mode("overwrite").save()
     }
