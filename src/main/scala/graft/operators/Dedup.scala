@@ -245,94 +245,13 @@ object Dedup {
     * generation (pairs alone don't say which copy to keep when dups
     * chain: a~b, b~c must collapse to one cluster).
     *
-    * Algorithm: iterative min-label propagation. Each propagation step
-    * takes every node to the min of its own and its neighbours' labels
-    * (one join + one min-agg); each LOOP ITERATION runs TWO propagation
-    * steps before the `localCheckpoint` + convergence action, so the
-    * driver barriers — the dominant per-round cost — are paid half as
-    * often (over-propagating past the fixpoint is free: labels are
-    * monotone). `maxIter` bounds loop iterations, i.e. up to 2·maxIter
-    * propagations. Near-dup graphs are overwhelmingly tiny cliques
-    * (diameter ≤ 2–3), so this beats the alternating-star contraction
-    * schemes (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC'14) until components grow adversarially long. The
-    * per-iteration `localCheckpoint` cuts the exponentially-growing
-    * lineage — the standard Spark iterative pattern. Convergence is
-    * detected by the label sum (labels only ever decrease, so an
-    * unchanged sum means a fixpoint).
-    *
-    * Returns (doc_id, cluster_id) for every doc appearing in `pairs`.
-    */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    // checkpoint the (possibly expensive) pair plan ONCE; edges, nodes
-    // and the initial labels all derive from the materialized rows.
-    // (r2's shape checkpointed edges but re-evaluated the full pair
-    // plan a second time for the initial labels — at sf0.1 that was
-    // half of d6's bench cost.)
-    val p0 = pairs.select(col("d1"), col("d2")).localCheckpoint()
-    // Size the propagation to the GRAPH, not the corpus: near-dup
-    // pairs are orders of magnitude smaller than the documents that
-    // produced them, and every round below shuffles only the graph.
-    // Left at the session's shuffle parallelism, each tiny round pays
-    // 32-task scheduling for ~hundreds of rows — measured 3.2 s of
-    // pure overhead on 309 pairs at sf0.1. The count is free (p0 is
-    // materialized); ~1M edge rows per partition keeps partitions
-    // small-int-sized while still scaling out for adversarial graphs.
-    val nPairs = p0.count()
-    val sess = p0.sparkSession
-    val sessParts = sess.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val nParts = math.max(1L, math.min(sessParts.toLong, nPairs / 1000000L + 1L)).toInt
-    val p = p0.repartition(nParts)
-    val edges = p.select(col("d1").as("src"), col("d2").as("dst"))
-      .unionByName(p.select(col("d2").as("src"), col("d1").as("dst")))
-    val nodes = p.select(col("d1").as("id"))
-      .unionByName(p.select(col("d2").as("id"))).distinct()
-    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    var prevSum = BigDecimal(-1)
-    var i = 0
-    var done = false
-    // one propagation = ONE join (neighbor contributions) + ONE
-    // min-agg over own ∪ contributed labels. The label side rides as
-    // a broadcast while the graph is broadcast-sized (labels ≤ 2·pairs
-    // rows of two longs), so the join needs no shuffle at all; beyond
-    // that the explicit repartition by the agg key pins the round's
-    // only exchange to nParts — either way no round ever shuffles at
-    // corpus parallelism.
-    val broadcastLabels = nPairs <= 1000000L
-    def propagate(l: DataFrame): DataFrame = {
-      val lab = if (broadcastLabels) broadcast(l) else l
-      val contrib = edges.join(lab, edges("dst") === lab("id"))
-        .select(col("src").as("id"), col("label"))
-      l.unionByName(contrib)
-        .repartition(nParts, col("id"))
-        .groupBy("id").agg(min(col("label")).as("label"))
-    }
-    while (!done && i < maxIter) {
-      // TWO propagations per checkpoint + convergence action: labels
-      // only decrease, so over-propagating past the fixpoint is free,
-      // and the driver barriers (materialize + sum) — the dominant
-      // per-round cost — are paid half as often
-      labels = propagate(propagate(labels)).localCheckpoint()
-      val sum = Option(
-        labels.agg(org.apache.spark.sql.functions.sum(col("label").cast("decimal(38,0)")))
-          .head().getDecimal(0)).map(BigDecimal(_)).getOrElse(BigDecimal(0))
-      done = sum == prevSum
-      prevSum = sum
-      i += 1
-    }
-    // CONVERGENCE CONTRACT (r10, twin of connectedComponents'): labels
-    // only decrease, so a stable label sum IS the fixpoint — and a
-    // loop that exits at the cap WITHOUT it has split clusters and
-    // must fail loudly, not return silently-wrong labels. Propagation
-    // pays one round per hop of cluster diameter; near-dup clusters
-    // are tiny cliques (diameter 1-2), so tripping this means the
-    // graph is path-shaped — use Graph.connectedComponents (star
-    // contraction, O(log^2) on any topology) or raise maxIter.
-    if (!done) throw new IllegalStateException(
-      s"dupClusters did not converge in $maxIter iterations (2 propagations each; " +
-        s"$nPairs pairs) — path-shaped duplicate graphs need Graph.connectedComponents")
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
+    * [[Graph.connectedComponents]] in the dedup column names: (d1, d2)
+    * pairs in, (doc_id, cluster_id) out for every doc appearing in
+    * `pairs` — the format [[survivorship]] and [[applySurvivorship]]
+    * read. */
+  def dupClusters(pairs: DataFrame): DataFrame =
+    Graph.connectedComponents(pairs.select(col("d1").as("src"), col("d2").as("dst")))
+      .select(col("node").as("doc_id"), col("component").as("cluster_id"))
 
   /** Exact-duplicate groups by canonical fingerprint: one row per
     * duplicated fingerprint with the surviving (min) id and group size. */

@@ -98,12 +98,12 @@ object Graph {
         .join(contribs.select(col("dst").as("node"), col("s")), Seq("node"), "left")
         .select(col("node"),
           (lit(teleport) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
-      // Truncate lineage every 3 rounds (the dupClusters pattern,
-      // Dedup.scala): without it the plan nests one join+agg per
-      // iteration, so analysis/codegen cost grows with `iters` and
-      // real PageRank iteration counts (20-50) die in the optimizer
-      // long before any executor works. The checkpoint materializes
-      // |V| rows — the same rows the next shuffle moves anyway.
+      // Truncate lineage every 3 rounds: without it the plan nests
+      // one join+agg per iteration, so analysis/codegen cost grows
+      // with `iters` and real PageRank iteration counts (20-50) die
+      // in the optimizer long before any executor works. The
+      // checkpoint materializes |V| rows — the same rows the next
+      // shuffle moves anyway.
       if (i % 3 == 0 && i < iters) ranks = ranks.localCheckpoint()
     }
     // eager-materialize the result BEFORE releasing the cached edge
@@ -161,15 +161,15 @@ object Graph {
 
   /** Connected components by ALTERNATING STAR CONTRACTION — the
     * two-round large-star / small-star scheme of Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond" (SoCC 2014). This
-    * is the adversarial-diameter complement to
-    * [[graft.operators.Dedup.dupClusters]]' min-label propagation:
-    * propagation pays one shuffle round per hop of graph diameter (a
-    * 10,000-link chain = ~10,000 rounds), star contraction halves
-    * chain structure every alternation and converges in O(log²)
-    * rounds on ANY topology — the right primitive when components can
-    * be long paths (URL redirect chains, citation chains, linked-page
-    * graphs), not the tiny cliques near-dup graphs produce.
+    * "Connected Components in MapReduce and Beyond" (SoCC 2014), and
+    * the engine's one components operator: near-dup clusters
+    * ([[graft.operators.Dedup.dupClusters]], d6/d9/d10/t26/c4) and
+    * d16's long chains both run on it. Where min-label propagation
+    * pays one shuffle round per hop of graph diameter (a 10,000-link
+    * chain = ~10,000 rounds), star contraction halves chain structure
+    * every alternation and converges in O(log²) rounds on ANY
+    * topology — tiny near-dup cliques and long paths (URL redirect
+    * chains, citation chains, linked-page graphs) alike.
     *
     *  - local pass: before the first round, each input partition runs
     *    a union-find over its own pairs ([[localStars]]) and emits its
@@ -185,20 +185,20 @@ object Graph {
     * join back to the input, no driver state. The local pass needs no
     * exchange at all, and it is duplicate-insensitive, so the input is
     * never `distinct`ed. Edge weights only ever decrease, so the
-    * (count, hash-sum) fingerprint is a sound fixpoint test (the d6
-    * label-sum discipline). At convergence every component is a star
-    * centered on its minimum node: labels read off as min(self,
-    * neighbors). Nodes compare with their column's own ordering —
-    * string keys work, ids are never cast.
+    * (count, hash-sum) fingerprint is a sound fixpoint test. At
+    * convergence every component is a star centered on its minimum
+    * node: labels read off as min(self, neighbors). Nodes compare
+    * with their column's own ordering — string keys work, ids are
+    * never cast.
     *
-    * Scale posture: shuffles are sized to the GRAPH (dupClusters'
-    * repartition discipline: ~1M edges/partition, never corpus
-    * parallelism); each round moves only the current edge relation,
-    * which contraction SHRINKS round over round, through three
-    * exchanges (large-star window, small-star window, terminal
-    * repartition). A component that one input partition holds whole
-    * leaves the local pass finished, so a graph whose partitions
-    * hold whole components stops after one confirming round. The
+    * Scale posture: shuffles are sized to the GRAPH (~1M
+    * edges/partition, never corpus parallelism); each round moves
+    * only the current edge relation, which contraction SHRINKS round
+    * over round, through three exchanges (large-star window,
+    * small-star window, terminal repartition). A component that one
+    * input partition holds whole leaves the local pass finished, so a
+    * graph whose partitions hold whole components stops after one
+    * confirming round. The
     * local pass holds a bounded number of nodes per task, and the
     * large-star window's row buffer spills, so a hub's task stays
     * memory-bounded (SCALING.md). localCheckpoint per round bounds
@@ -223,7 +223,7 @@ object Graph {
     // that job as an Observation. The loop's edges are the a ≠ b rows;
     // the node set is every `a`, because each node the input mentions
     // emits one row — a node appearing only as (x, x) is a singleton
-    // component and still gets its output row (dupClusters parity).
+    // component and still gets its output row.
     // The loop starts from the local pass's fingerprint, so an input
     // the pass already reduced to stars stops after round 1.
     val localObs = Observation()

@@ -1728,8 +1728,9 @@ object CurationQueries {
     * Scale shape: each stage is the already-audited operator plan (no
     * new shuffles added by the composition); the only materialization
     * is the lazy-checkpointed source (one pass) and dupClusters' own
-    * graph-sized propagation. Attrition rows are five bounded scalar
-    * aggregates unioned (the an17 shape — allowlisted same-commit). */
+    * graph-sized star contraction. Attrition rows are five bounded
+    * scalar aggregates unioned (the an17 shape — allowlisted
+    * same-commit). */
   val c4CurationFunnel: Q = (s, dir) => {
     import s.implicits._
     val Corpus = graft.operators.Corpus

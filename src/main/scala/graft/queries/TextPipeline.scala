@@ -312,9 +312,9 @@ object TextPipeline {
     * keyed on the NEAR-DUP CLUSTER id instead of the document id, so a
     * near-duplicate pair can never straddle train and test (the eval-
     * contamination path a doc-keyed split leaves open). split_key =
-    * the d6 min-label cluster for clustered docs, the doc's own id
-    * otherwise; every cluster member inherits the same bucket by
-    * construction. Cost on top of t5 is the d2/d6 pair machinery the
+    * the d6 cluster (its smallest member id) for clustered docs, the
+    * doc's own id otherwise; every cluster member inherits the same
+    * bucket by construction. Cost on top of t5 is the d2/d6 pair machinery the
     * dedup pipeline has already run — the join against the cluster
     * list (pairs-sized, broadcast) is the only addition. */
   val t26LeakageSafeSplit: Q = (s, dir) => {
@@ -865,9 +865,10 @@ object TextPipeline {
 
   /** D6: duplicate CLUSTERS from the d2 near-dup pairs — connected
     * components labelled by smallest member id (the canonical-survivor
-    * assignment; a~b, b~c collapse to one cluster). The oracle replays
-    * the same closure with a recursive CTE: min reachable id ==
-    * min-label-propagation fixpoint. */
+    * assignment; a~b, b~c collapse to one cluster), by star
+    * contraction ([[graft.operators.Graph.connectedComponents]] via
+    * Dedup.dupClusters). The oracle replays the same closure with a
+    * recursive CTE: min reachable id == the component's minimum. */
   val d6DupClusters: Q = (s, dir) => {
     import s.implicits._
     Dedup.dupClusters(Dedup.minhashNearDups(docsWithDups(s, dir), "doc_id", "text"))
@@ -875,8 +876,8 @@ object TextPipeline {
   }
 
   /** Transitive-closure CTE chain over the d2 pair list `res`:
-    * `clusters(doc_id, cluster_id)` = min reachable id, the same
-    * fixpoint the Spark min-label propagation converges to. Shared by
+    * `clusters(doc_id, cluster_id)` = min reachable id, the component
+    * minimum the Spark star contraction labels each node with. Shared by
     * d6 (cluster listing), d9 (survivor pick) and d10 (applied dedup).
     * Prepend `WITH RECURSIVE $d2PairsCtes,`. */
   private[queries] val clusterCtes: String =
@@ -897,14 +898,13 @@ object TextPipeline {
 
   /** D16: connected components by ALTERNATING STAR CONTRACTION
     * ([[graft.operators.Graph.connectedComponents]], Kiveris et al.
-    * SoCC'14) — the adversarial-diameter complement to d6's min-label
-    * propagation, exercised on the topology propagation is worst at:
-    * LONG CHAINS. The graph is derived deterministically from document
-    * ids: three interleaved 80-link chains (doc_id < 237 → edge
+    * SoCC'14) — the operator d6's near-dup clusters also run on,
+    * exercised on the adversarial-diameter topology: LONG CHAINS. The
+    * graph is derived deterministically from document ids: three interleaved 80-link chains (doc_id < 237 → edge
     * (doc_id, doc_id+3), one chain per residue mod 3 — diameter ~79,
-    * where propagation would pay ~79 shuffle rounds and contraction
-    * pays ~log), plus size-2 components ((doc_id, doc_id+1) for
-    * doc_id % 17 == 0 above the chains). The oracle computes the same
+    * where min-label propagation would pay ~79 shuffle rounds and
+    * contraction pays ~log), plus size-2 components ((doc_id,
+    * doc_id+1) for doc_id % 17 == 0 above the chains). The oracle computes the same
     * fixpoint as a recursive-CTE transitive closure with a final
     * min-group (the d6 oracle discipline). */
   val d16CcStars: Q = (s, dir) => {

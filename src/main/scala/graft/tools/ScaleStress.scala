@@ -657,24 +657,14 @@ object ScaleStress {
       }
     }
 
-    // d16: alternating-star CC vs min-label propagation on CHAINS —
-    // the adversarial-diameter topology. Stars should grow ~log with
-    // chain length; propagation pays one round per 2 hops of diameter
-    // (so 256 links ≈ 128 propagations ≈ 64 loop iterations), which is
-    // why dupClusters is only measured at the short lengths and with
-    // maxIter raised past its 20-round near-dup default.
+    // d16: alternating-star CC on CHAINS — the adversarial-diameter
+    // topology. Rounds should grow ~log with chain length.
     if (sect("d16")) {
-      import spark.implicits._
       def chain(len: Int): DataFrame =
         spark.range(0, len).select(col("id").as("src"), (col("id") + 1).as("dst"))
       Seq(64, 256, 1024, 4096).foreach { len =>
         time(s"d16 stars chain=$len") {
           graft.operators.Graph.connectedComponents(chain(len)) }
-      }
-      Seq(64, 256).foreach { len =>
-        time(s"d6  prop  chain=$len") {
-          Dedup.dupClusters(chain(len)
-            .select(col("src").as("d1"), col("dst").as("d2")), maxIter = 2048) }
       }
     }
 

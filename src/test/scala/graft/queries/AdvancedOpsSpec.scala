@@ -359,19 +359,6 @@ class AdvancedOpsSpec extends AnyFunSuite {
     assert(ok.length === 65 && ok.forall(_.getLong(1) === 0L))
   }
 
-  test("dupClusters fails LOUDLY when maxIter is too small for the graph diameter (r10 contract)") {
-    import spark.implicits._
-    // a 64-link chain needs ~32 double-propagation rounds; 3 must trip
-    // the convergence contract, and the message routes the caller to
-    // the star-contraction operator built for path-shaped graphs
-    val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val e = intercept[IllegalStateException] {
-      graft.operators.Dedup.dupClusters(pairs, maxIter = 3)
-    }
-    assert(e.getMessage.contains("converge") &&
-      e.getMessage.contains("connectedComponents"))
-  }
-
   test("connectedComponents: multiple components, duplicate and self-loop edges tolerated") {
     import spark.implicits._
     val edges = Seq(
@@ -385,21 +372,6 @@ class AdvancedOpsSpec extends AnyFunSuite {
     assert(out === Map(5L -> 5L, 9L -> 5L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 40L -> 40L, 41L -> 40L,
       77L -> 77L))
-  }
-
-  test("connectedComponents agrees with dupClusters on a pseudo-random graph") {
-    import spark.implicits._
-    // deterministic scatter: 300 edges over ~120 nodes, mixed shapes
-    val edges = (1 to 300).map { i =>
-      val a = (i * 37) % 120; val b = (i * i * 13 + 7) % 120
-      (a.toLong, b.toLong)
-    }.filter { case (a, b) => a != b }.toDF("src", "dst")
-    val stars = Graph.connectedComponents(edges).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val prop = graft.operators.Dedup.dupClusters(
-        edges.select($"src".as("d1"), $"dst".as("d2"))).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(stars === prop)
   }
 
   test("connectedComponents: string-keyed nodes order lexicographically, never cast") {
@@ -426,6 +398,22 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val expected = driverComponents(pairs)
     assert(out === expected)
     assert(expected.values.toSet === Set(0L, 30000L))
+  }
+
+  test("connectedComponents agrees with dupClusters on a pseudo-random graph") {
+    import spark.implicits._
+    // deterministic scatter: 300 edges over ~120 nodes, mixed shapes.
+    // dupClusters is connectedComponents under the (d1, d2) ->
+    // (doc_id, cluster_id) renaming; both must give the union-find's labels
+    val edges = (1 to 300).map { i =>
+      val a = (i * 37) % 120; val b = (i * i * 13 + 7) % 120
+      (a.toLong, b.toLong)
+    }.filter { case (a, b) => a != b }
+    val stars = labels(Graph.connectedComponents(edges.toDF("src", "dst")))
+    val clusters = graft.operators.Dedup.dupClusters(edges.toDF("d1", "d2"))
+    assert(clusters.columns.toSeq === Seq("doc_id", "cluster_id"))
+    assert(stars === labels(clusters))
+    assert(stars === driverComponents(edges))
   }
 
   // ---- the local pass (per-partition union-find before round 1) ------
@@ -512,6 +500,16 @@ class AdvancedOpsSpec extends AnyFunSuite {
     }
   }
 
+  /** Jobs launched while `SparkEntry.queries(q)` builds the query at
+    * sf0.001, then while a noop write runs it. */
+  private def jobLedger(q: String): (Int, Int) = {
+    var df: org.apache.spark.sql.DataFrame = null
+    val built = TestSpark.jobsDuring { df = SparkEntry.queries(q)(spark, sf) }
+    val ran = TestSpark.jobsDuring { df.write.format("noop").mode("overwrite").save() }
+    info(s"$built jobs at construction, $ran at execution")
+    (built, ran)
+  }
+
   test("d16_cc_stars runs at most 11 jobs, 5 at construction") {
     // measured at sf0.001: 5 jobs build the query (the local pass's
     // checkpoint and one star round of 4 jobs) and 6 run it. Each
@@ -520,11 +518,21 @@ class AdvancedOpsSpec extends AnyFunSuite {
     // them. With the distinct input checkpointed and 8 rounds to the
     // fixpoint the query launched 40; with each star step a groupBy
     // min joined back to its input, 71.
-    var q: org.apache.spark.sql.DataFrame = null
-    val built = TestSpark.jobsDuring { q = SparkEntry.queries("d16_cc_stars")(spark, sf) }
-    val ran = TestSpark.jobsDuring { q.write.format("noop").mode("overwrite").save() }
-    info(s"$built jobs at construction, $ran at execution")
+    val (built, ran) = jobLedger("d16_cc_stars")
     assert(built <= 5, s"d16_cc_stars launched $built jobs at construction")
     assert(built + ran <= 11, s"d16_cc_stars launched ${built + ran} jobs")
+  }
+
+  test("d6_dup_clusters runs at most 24 jobs, 18 at construction") {
+    // measured at sf0.001: the minhash pair pipeline's exchanges and
+    // the local pass's checkpoint build the query, with one confirming
+    // star round, since the pairs arrive with whole components in one
+    // partition. With min-label propagation (a pair count, a
+    // checkpoint and a label-sum job per two propagations) the query
+    // launched 35 jobs at construction and 38 in total here, and 35
+    // at construction at sf0.01.
+    val (built, ran) = jobLedger("d6_dup_clusters")
+    assert(built <= 18, s"d6_dup_clusters launched $built jobs at construction")
+    assert(built + ran <= 24, s"d6_dup_clusters launched ${built + ran} jobs")
   }
 }
