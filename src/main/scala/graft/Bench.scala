@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   /** Representative cross-section of the operator inventory: scan+agg,
@@ -270,7 +269,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Contention guard (r4: a loadavg-6.6 run made t9/an15 medians
     // unattributable): a polluted run must never masquerade as a
     // regression. Wait for the machine to go quiet before timing — up
@@ -299,26 +297,10 @@ object Bench {
     // core count (r14 — see Tables.derivedShuffleParts): on this SF it
     // stops paying ~15 ms × 32 empty-reducer launches per exchange; at
     // 100 TB the same formula grows past the core count to keep
-    // partitions in the guide-§2.2 size band. The core count still
-    // comes from $SPARK_GRAFT_CPUS (driver contract).
+    // partitions in the guide-§2.2 size band.
     val shuffleParts =
-      Tables.derivedShuffleParts(Tables.inputBytes(sfDir), cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep events.ts a plain TIMESTAMP regardless of how the parquet
-      // was written (isAdjustedToUTC drifted across generator versions)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // the 30-query run generates ~600 codegen units; the default
-      // 100-entry class cache would evict mid-run and re-pay janino
-      // compiles inside timed reps (measured as multi-second spikes
-      // in single-task broadcast-build stages)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      Tables.derivedShuffleParts(Tables.inputBytes(sfDir), GraftSession.cpus)
+    val spark = GraftSession(GraftSession.localMaster, shuffleParts)
     // Force through the NOOP SINK, never count(): under count() the
     // optimizer deletes the operator under test — column pruning
     // reduced n4's quantization and t3's tokenizers to bare scans,
@@ -459,8 +441,7 @@ object Bench {
     // console line now carries only the driver-contract fields (metric/
     // value/unit/queries/sf), the two totals, failed queries' causes
     // and the run-health scalars (~2.5 KB); the per-query aux maps (spread/valid/
-    // calib_rel/budget_ok/budgets) live in the FILE artifact, which
-    // BenchDiff and the round-close workflow read.
+    // calib_rel/budget_ok/budgets) live in the FILE artifact.
     val consoleJson = s"""{"metric":"total","value":$total,"unit":"sec","streaming_fixed_sec":$streamingFixed,"grand_total_sec":$grandTotal,"queries":$qjsonShort,"spread_ok":$spreadOk,"spread_limit":$spreadLimit,"errors":$errors,"failures":$fjson,"reps":$reps,"forcing":"noop_write","shuffle_partitions":$shuffleParts,"loadavg":"$load","loadavg_start":"$startLoad","busy_start":$busyStart,"steal_pct_run":$runSteal,"calib_sec_start":${f3(calib0)},"calib_sec_end":${f3(calibEnd)},"sf":"$sfDir"}"""
     println(consoleJson)
     // ALSO write the artifact to a file: BENCH_r09's per-query medians

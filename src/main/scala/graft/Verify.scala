@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,23 +8,13 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (dev loop)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // input-scale-derived shuffle parallelism, same derivation as
     // Bench (r14 — Tables.derivedShuffleParts): the dumped results are
     // partitioning-invariant by construction (the oracle pins them),
     // so Verify only gains the removed empty-reducer scheduling
     val shuffleParts =
-      Tables.derivedShuffleParts(Tables.inputBytes(sfDir), cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep events.ts a plain TIMESTAMP regardless of how the parquet
-      // was written (isAdjustedToUTC drifted across generator versions)
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      Tables.derivedShuffleParts(Tables.inputBytes(sfDir), GraftSession.cpus)
+    val spark = GraftSession(GraftSession.localMaster, shuffleParts)
     new java.io.File(outDir).mkdirs()
     val attempted = SparkEntry.queries.keySet
       .filter(name => only.forall(_.contains(name)))

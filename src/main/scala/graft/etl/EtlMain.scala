@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count => countRows, lit}
 import org.apache.spark.storage.StorageLevel
 
+import graft.GraftSession
+
 /** CLI entry point: the reference's whole pipeline (ingest → clean →
   * star schema → sinks) over a set of scraper JSON-array files.
   *
@@ -103,20 +105,13 @@ object EtlMain {
     // created ourselves — stopping a caller's session would kill every
     // Spark user sharing the JVM
     val existing = SparkSession.getActiveSession
-    val spark = existing.getOrElse(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
+    val spark = existing.getOrElse(GraftSession(
+      sys.env.getOrElse("SPARK_MASTER", "local[4]"), GraftSession.cpus))
     // the pipeline's date semantics REQUIRE UTC; on a reused session
     // force it session-scoped for the duration of the run and RESTORE
     // the caller's zone afterwards (leave their log level alone too)
     val callerTz = spark.conf.getOption("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if (existing.isEmpty) spark.sparkContext.setLogLevel("WARN")
     // the run's cached relations, released in `finally` on success AND
     // failure: a failed run inside a reused session must not leave
     // blocks cached for the caller. The table tasks add to it

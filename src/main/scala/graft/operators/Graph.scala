@@ -52,7 +52,7 @@ object Graph {
     // cached deg and ed separately, and because cache population
     // happens per JOB, the expensive upstream build (for the gate's
     // an15: orders ⋈ lineitem + distinct) ran TWICE per run — measured
-    // as two ~16 s-of-task-time stage groups in the Profile trace.
+    // as two ~16 s-of-task-time stage groups in an r13 per-stage trace.
     // deg (|V| rows, referenced by the node count, the full node set,
     // and the initial ranks) now derives FROM the cached ed with a
     // co-partitioned aggregate — no extra shuffle, no re-build.

@@ -103,7 +103,7 @@ object AdvancedOps {
     // both read this materialization — un-checkpointed, the
     // orders ⋈ lineitem build ran once for the seed job and again for
     // the edge-cache population (two ~15 s-of-task-time stage groups
-    // per run in the Profile trace).
+    // per run in an r13 per-stage trace).
     // NO distinct at all (r14): BFS min-distance is invariant to
     // parallel edges — kHopReach's per-hop frontier is deduped by its
     // own `.distinct()` — so the (src, dst) distinct exchange bought

@@ -2398,11 +2398,13 @@ object EventQueries {
       row.write.mode("append").parquet(pDir)
     }
     // sentinel 1 is staged WITH the real rows (r14 drain-cost cut,
-    // StreamProfile-measured: the old drain ran EIGHT micro-batches —
-    // real data, two sentinel rounds whose two per-side appends even
-    // split into separate batches under the trigger poll race, plus
-    // no-data batches — at a profiled ~3-4 s of fixed state-store
-    // machinery per batch, data or not). The watermark computed at the
+    // measured per batch: the old drain ran EIGHT micro-batches — real
+    // data, two sentinel rounds whose two per-side appends even split
+    // into separate batches under the trigger poll race, plus no-data
+    // batches — at a profiled ~3-4 s of fixed state-store machinery per
+    // batch, data or not; `perfbench/run.py --workload stream_drains
+    // --trace 1` re-measures them as `stream.batches` and
+    // `stream.commit_s`). The watermark computed at the
     // END of batch 0 already passes every real row's join window on
     // both sides (both sides carry sentinel 1, so the min-policy query
     // watermark advances), so ONE more data batch flushes all

@@ -54,13 +54,15 @@ object Streams {
     * micro-batch for a stream-stream join) measured ~600 ms EACH —
     * ~75 s of summed commit time per micro-batch, the dominant share
     * of e13's fixed drain cost — vs ~1.4 s summed on tmpfs
-    * (StreamProfile A/B, r14: e13 12.4 s → 5.6 s end to end). Override
-    * with $SPARK_GRAFT_STREAM_SCRATCH; defaults to /dev/shm when
-    * writable (Linux), else java.io.tmpdir. Nothing written here
-    * outlives the query run — no result or intermediate is ever reused
-    * across runs. Production streams checkpoint to reliable shared
-    * storage for recovery; this path exists only for the single-node
-    * stage-drain-delete gate harness, where recovery is meaningless. */
+    * (r14 A/B: e13 12.4 s → 5.6 s end to end; `perfbench/run.py
+    * --workload stream_drains --trace 1` re-measures this cost as
+    * `stream.commit_s`). Override with $SPARK_GRAFT_STREAM_SCRATCH;
+    * defaults to /dev/shm when writable (Linux), else java.io.tmpdir.
+    * Nothing written here outlives the query run — no result or
+    * intermediate is ever reused across runs. Production streams
+    * checkpoint to reliable shared storage for recovery; this path
+    * exists only for the single-node stage-drain-delete gate harness,
+    * where recovery is meaningless. */
   def scratchTempDir(prefix: String): java.nio.file.Path = {
     val root = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")
       .map(java.nio.file.Paths.get(_))
@@ -106,18 +108,18 @@ object Streams {
     * partition) — measured ~linear in the partition count and
     * independent of data: e13's two-batch drain timed 9.7 s at 32
     * state partitions vs 4.0 s at 4 (quiet host, tmpfs scratch,
-    * StreamProfile r14). The gate drains process one bounded staged
-    * relation and die, so the default is deliberately small
-    * (min(session parallelism, 4)); production streams size state
-    * partitions to state volume per executor through the same conf —
-    * override with $SPARK_GRAFT_STREAM_PARTS. Only the STREAM runs
-    * under this conf: staging writes before and sink read-backs after
-    * a drain keep the session's batch parallelism. */
+    * r14; re-measure with `perfbench/run.py --workload stream_drains
+    * --trace 1`). The gate drains process one bounded staged relation
+    * and die, so the count is derived and deliberately small:
+    * min(session shuffle partitions, 4). Production streams size state
+    * partitions to state volume per executor through the same conf.
+    * Only the STREAM runs under this conf: staging writes before and
+    * sink read-backs after a drain keep the session's batch
+    * parallelism. */
   def withGateDrainConf[T](spark: SparkSession)(body: => T): T = {
     val pKey = "spark.sql.shuffle.partitions"
     val prevParts = spark.conf.getOption(pKey)
-    val drainParts = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt)
-      .getOrElse(math.min(prevParts.map(_.toInt).getOrElse(200), 4))
+    val drainParts = math.min(prevParts.map(_.toInt).getOrElse(200), 4)
     spark.conf.set(pKey, drainParts.toString)
     try withNoDataBatchesDisabled(spark)(body)
     finally prevParts match {

@@ -3,10 +3,9 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dumps the formatted physical plan of every headline query to
   * PLANS.md — the explain-driven feedback loop: check that filters are
@@ -19,13 +18,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.drop(1).headOption.getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[4]", 4)
 
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the headline queries\n\n")

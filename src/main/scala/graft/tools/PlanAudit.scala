@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Sweeps EVERY registered query's physical plan for the shapes that
   * die at 100 TB: Exchange SinglePartition (one-task funnels),
@@ -128,13 +128,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[4]", 4)
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => excluded.contains(name) }
       .foreach { case (name, fn) =>

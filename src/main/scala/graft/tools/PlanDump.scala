@@ -3,10 +3,9 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dumps the formatted physical plan of NAMED queries to per-query
   * files — the optimization-round evidence trail (`plans/r13/`): one
@@ -22,8 +21,9 @@ import graft.SparkEntry
   * codebook training (n7/n10/n11/n12/d11/an23), and e10/e18's slotv
   * pin — run real Spark jobs when dumped here, and the dumped plan
   * shows `Scan ExistingRDD` where the interesting upstream work
-  * happened. For those, the evidence trail is the Profile stage trace
-  * plus the operator's scaladoc, not this dump.
+  * happened. For those, the evidence trail is a traced run
+  * (`perfbench/probe.py --ops <query>` records its jobs and task-time
+  * share) plus the operator's scaladoc, not this dump.
   *
   *   runMain graft.tools.PlanDump <outDir> <tag> <q1,q2,...> [sfDir]
   */
@@ -34,13 +34,7 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = args.drop(3).headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[4]", 4)
     Files.createDirectories(outDir)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

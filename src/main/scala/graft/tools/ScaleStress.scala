@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.{Bloom, Corpus, Dedup, Quantize, Similarity}
 
 /** Dedup-path scaling experiments over derived corpora (the
@@ -22,15 +22,7 @@ import graft.operators.{Bloom, Corpus, Dedup, Quantize, Similarity}
 object ScaleStress {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.localMaster, GraftSession.cpus)
 
     // optional section filter: `runMain graft.tools.ScaleStress d12 t17`
     val only: Set[String] = args.toSet
