@@ -1,12 +1,16 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.operators.AsOfJoin
+import graft.streaming.Streams
 
 /** Temporal operators over the events table: the as-of join (SURVEY §2.4
   * J4 — the quartile "greatest year <= article year" lookup), event-time
@@ -269,72 +273,63 @@ object EventQueries {
     * Streams.sessionizeStreamExact (watermark + EventTimeTimeout,
     * long-scaled exact value accumulation); a far-future sentinel
     * staged with the real rows plus one sentinel round advance the
-    * watermark so every real session flushes. The
+    * watermark so every real session flushes ([[runShiftedGate]]). The
     * oracle is the BATCH gap-sessionization SQL — proving streaming ==
-    * batch semantics on the full events table, not a toy fixture.
-    *
-    * HARNESS SCOPE (applies to every streaming gate query — e4, e6,
-    * e7, e11, e12): the driver-local temp-dir replay and the
-    * `memory`-sink collect exist to hand the verifier a comparable
-    * DataFrame; they are the gate's test rig, not the deployment
-    * topology. The library operators under [[graft.streaming.Streams]]
-    * are source/sink-agnostic: production reads a durable shared
-    * source (object store / Kafka), writes a checkpointed parquet or
-    * foreachBatch sink, and no result relation ever collects to the
-    * driver (StreamsSpec's checkpoint-recovery test runs exactly that
-    * shape). */
+    * batch semantics on the full events table, not a toy fixture. */
   val e4StreamSessions: Q = (s, dir) => {
     import s.implicits._
-    import graft.streaming.Streams
     val ev = Tables.load(s, dir, "events").select($"user_id", $"ts", $"value")
     // pre-epoch option: 0 on the driver's post-epoch testdata (inert);
     // on historical fixtures it translates event time past epoch 0 so
     // watermarking doesn't birth the rows late, and the session bounds
     // are shifted back below — gap clustering is translation-invariant
-    // staging + checkpoint on the gate-scratch medium (see
-    // Streams.scratchTempDir); staged files live in their own subdir so
-    // the file source never lists checkpoint files as input
-    val base = Streams.scratchTempDir("graft-e4")
-    val tmp = base.resolve("staged").toString
-    val off = Streams.stageWithEpochShift(ev, "ts", tmp)
-    val stream = Streams.shiftTs(
-      s.readStream.schema(ev.schema).parquet(tmp), "ts", off).as[Streams.Event]
-    // sentinel 1 is STAGED WITH the real rows (r14 drain-cost cut): the
-    // watermark computed at the END of batch 0 already passes every open
-    // session's close, so ONE sentinel round — whose batch fires the
-    // timeouts — replaces the previous two (each extra round = a parquet
-    // write + a full stateful micro-batch of fixed machinery). No-data
-    // micro-batches are disabled for the drain: the eviction rides the
-    // sentinel-2 DATA batch, so watermark-only batches are pure overhead.
-    // finally: a sentinel-write failure must not leak the live query
-    // into the shared session for the rest of the Verify run
-    def sentinel(sec: Long): Unit =
-      Seq((-1L, new java.sql.Timestamp(sec * 1000L), 0.0))
-        .toDF("user_id", "ts", "value")
-        .write.mode("append").parquet(tmp)
-    sentinel(4102444800L) // 2100-01-01, rides batch 0 with the real rows
-    Streams.withGateDrainConf(s) {
-      val q = Streams.sessionizeStreamExact(stream)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .format("memory").queryName("e4_sessions").start()
-      try {
-        q.processAllAvailable()
-        sentinel(4102444860L) // batch 1 fires the timeouts
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        // results live in the memory sink; the staged parquet replay
-        // dir is dead weight from here — don't leak it across Bench runs
-        graft.etl.Writers.deleteRecursively(base.toFile)
-      }
-    }
-    s.table("e4_sessions").filter($"user_id" =!= -1L)
+    val (table, off) = runShiftedGate(s, ev, 3600L, "e4_sessions",
+      eventSentinel(s))(df => Streams.sessionizeStreamExact(df.as[Streams.Event]))
+    table.filter($"user_id" =!= -1L)
       .select($"user_id", ($"session_start" - off).as("session_start"),
         ($"session_end" - off).as("session_end"),
         $"n_events", $"value_scaled")
       .orderBy($"user_id", $"session_start")
+  }
+
+  /** The stage and flush steps of the gates that flush on event time
+    * (e4, e11, e17 and the daily tiers; see Streams.gateDrain for the
+    * sentinel policy): stage `ev` to `<scratch>/staged` with the epoch
+    * shift at `granularitySeconds` (a multiple of every window, gap or
+    * day the producer keys on, so the shift is translation-exact),
+    * append `sentinel`'s 2100-01-01 row so it rides batch 0, and run
+    * `producer` over the shifted replay; the flush appends the row a
+    * minute later. Returns the sink table, sentinel rows included, and
+    * the shift in micros to subtract from its instants. */
+  private def runShiftedGate(s: SparkSession, ev: DataFrame,
+      granularitySeconds: Long, queryName: String,
+      sentinel: java.sql.Timestamp => DataFrame)(
+      producer: DataFrame => Dataset[_]): (DataFrame, Long) = {
+    def append(scratch: Path, sec: Long): Unit = {
+      val row = sentinel(new java.sql.Timestamp(sec * 1000L))
+      // the sentinel shares the replay dir: a differently-shaped row
+      // would fail obscurely mid-drain, so the shape is checked here
+      require(row.columns.toSeq == ev.columns.toSeq,
+        s"$queryName: sentinel columns [${row.columns.mkString(", ")}] " +
+          s"differ from the staged [${ev.columns.mkString(", ")}]")
+      row.write.mode("append").parquet(scratch.resolve("staged").toString)
+    }
+    var off = 0L
+    val table = Streams.gateDrain(queryName, OutputMode.Append,
+        Some(append(_, 4102444860L))) { scratch =>
+      val staged = scratch.resolve("staged").toString
+      off = Streams.stageWithEpochShift(ev, "ts", staged, granularitySeconds)
+      append(scratch, 4102444800L)
+      producer(Streams.shiftTs(s.readStream.schema(ev.schema).parquet(staged), "ts", off))
+    }
+    (table, off)
+  }
+
+  /** The watermark sentinel of the (user_id, ts, value) event gates:
+    * user -1, which the daily tiers skip and e4 filters from its sink. */
+  private def eventSentinel(s: SparkSession)(ts: java.sql.Timestamp): DataFrame = {
+    import s.implicits._
+    Seq((-1L, ts, 0.0)).toDF("user_id", "ts", "value")
   }
 
   val e4StreamSessionsSql: String =
@@ -368,45 +363,46 @@ object EventQueries {
     * == batch on the full events table. */
   val e6StreamJoin: Q = (s, dir) => {
     import s.implicits._
-    import graft.streaming.Streams
-    val ev = Tables.load(s, dir, "events")
-      .select($"event_id", $"user_id", $"ts", $"event_type")
-    val base = Streams.scratchTempDir("graft-e6") // gate-scratch medium
-    // one staging pass for both sides (r13 — the runAttributionStream
-    // partitionBy discipline; the partition column stays out of the
-    // data files, so the staged schema is unchanged)
-    val stagedDir = base.resolve("staged").toString
-    ev.filter($"event_type".isin("click", "purchase"))
-      .write.mode("overwrite").partitionBy("event_type").parquet(stagedDir)
-    // literal partition paths are safe ONLY for these two fixed values
-    // (advisor note, r13): Spark percent-escapes special characters in
-    // partition directory names, so a value like "a b" would land in
-    // "event_type=a%20b" and a naive literal path would miss it — any
-    // new event_type here must go through the same isin + literal-dir
-    // pairing (and the pre-created dir keeps a zero-row side readable)
-    val cDir = s"$stagedDir/event_type=click"
-    val pDir = s"$stagedDir/event_type=purchase"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pDir))
-    val sch = ev.drop("event_type").schema
-    val joined = Streams.attributionJoin(
-      s.readStream.schema(sch).parquet(cDir),
-      s.readStream.schema(sch).parquet(pDir))
-    Streams.withGateDrainConf(s) {
-      val q = joined.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .format("memory").queryName("e6_attrib").start()
-      try q.processAllAvailable()
-      finally {
-        q.stop()
-        graft.etl.Writers.deleteRecursively(base.toFile)
-      }
+    Streams.gateDrain("e6_attrib", OutputMode.Append, None) { scratch =>
+      val (clicks, purchases) = stageClicksPurchases(s, dir, scratch)
+      Streams.attributionJoin(clicks, purchases)
     }
-    s.table("e6_attrib")
       .select($"purchase_id", $"click_id", $"user_id", $"lag_us")
       .orderBy($"purchase_id", $"click_id")
   }
+
+  /** The stage step of e6 and the attribution gates: clicks and
+    * purchases of the events table to `<scratch>/staged` in ONE
+    * partitionBy write (r13; the partition column stays out of the
+    * data files, so the staged schema is unchanged — the two filtered
+    * writes it replaced scanned the events table twice), returned as
+    * the (click, purchase) replay streams. */
+  private def stageClicksPurchases(s: SparkSession, dir: String, scratch: Path)
+      : (DataFrame, DataFrame) = {
+    val ev = Tables.load(s, dir, "events")
+      .select("event_id", "user_id", "ts", "event_type")
+    ev.filter(col("event_type").isin("click", "purchase"))
+      .write.mode("overwrite").partitionBy("event_type")
+      .parquet(scratch.resolve("staged").toString)
+    val sch = ev.drop("event_type").schema
+    // a side with zero staged rows writes no partition directory; the
+    // stream reader needs the path to exist (sentinels may append into
+    // it later)
+    def side(eventType: String): DataFrame = {
+      val d = sideDir(scratch, eventType)
+      Files.createDirectories(Paths.get(d))
+      s.readStream.schema(sch).parquet(d)
+    }
+    (side("click"), side("purchase"))
+  }
+
+  /** A staged side's partition dir. Literal partition paths are safe
+    * ONLY for the two fixed values above (advisor note, r13): Spark
+    * percent-escapes special characters in partition directory names,
+    * so a value like "a b" would land in "event_type=a%20b" — a new
+    * event_type must extend the isin list AND this pairing together. */
+  private def sideDir(scratch: Path, eventType: String): String =
+    scratch.resolve("staged").resolve(s"event_type=$eventType").toString
 
   val e6StreamJoinSql: String =
     """SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id,
@@ -1459,7 +1455,6 @@ object EventQueries {
     * and batch-order-free, the two properties recovery replay needs. */
   val e14StreamMergeSink: Q = (s, dir) => {
     import s.implicits._
-    import graft.streaming.Streams
     val byInstant = Window.partitionBy($"user_id", $"tus")
       .orderBy($"event_id".desc)
     val log = Tables.load(s, dir, "events")
@@ -1469,19 +1464,19 @@ object EventQueries {
       .withColumn("rn", row_number().over(byInstant))
       .filter($"rn" === 1)
       .select($"user_id", $"tier", $"tus".as("version"), $"op")
-    val base = Streams.scratchTempDir("graft-e14") // gate-scratch medium
-    val tmp = base.resolve("staged").toString
-    log.write.mode("overwrite").parquet(tmp)
-    val stream = s.readStream.schema(log.schema)
-      .option("maxFilesPerTrigger", "8") // force several micro-batches
-      .parquet(tmp)
-    val merged = Streams.withGateDrainConf(s) {
-      Streams.mergeSinkOnce(stream, keys = Seq("user_id"),
-        redeliver = true, checkpointDir = Some(base.resolve("ckpt").toString))
+    // the state mergeSinkOnce returns is localCheckpointed, so it
+    // outlives the scratch dir
+    Streams.withGateScratch("graft-e14") { scratch =>
+      val staged = scratch.resolve("staged").toString
+      log.write.mode("overwrite").parquet(staged)
+      val stream = s.readStream.schema(log.schema)
+        .option("maxFilesPerTrigger", "8") // force several micro-batches
+        .parquet(staged)
+      Streams.withGateDrainConf(s) {
+        Streams.mergeSinkOnce(stream, keys = Seq("user_id"),
+          redeliver = true, checkpointDir = Some(scratch.resolve("ckpt").toString))
+      }
     }
-    // state is localCheckpointed inside mergeSinkOnce; the replay dir is dead
-    graft.etl.Writers.deleteRecursively(base.toFile)
-    merged
       .filter($"op" =!= "D")
       .select($"user_id", $"tier", $"version")
       .orderBy($"user_id")
@@ -1557,41 +1552,41 @@ object EventQueries {
     * exactly-once property. */
   val e15CheckpointResume: Q = (s, dir) => {
     import s.implicits._
-    // scratch medium holds both the replay data and the SHARED
-    // checkpoint the two runs resume across — both die with this run
-    val base = graft.streaming.Streams.scratchTempDir("graft-e15")
-    val data = base.resolve("data").toString
-    val ckpt = base.resolve("ckpt").toString
     val ev = Tables.load(s, dir, "events")
       .select($"event_id", $"event_type",
         expr("CAST(round(value * 10000) AS BIGINT)").as("v_scaled"))
-    ev.filter($"event_id" % 2 === 0).drop("event_id")
-      .write.mode("overwrite").parquet(data)
-    var state: DataFrame = null
-    def drain(): Unit = graft.streaming.Streams.withGateDrainConf(s) {
-      val stream = s.readStream.schema(ev.drop("event_id").schema).parquet(data)
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            _: java.lang.Long) =>
-          val part = batch.groupBy($"event_type")
-            .agg(count(lit(1)).as("cnt_n"), sum($"v_scaled").as("sum_v"))
-            .localCheckpoint()
-          state = (if (state == null) part
-            else graft.operators.Cdc.mergePartialAggs(state, part, Seq("event_type")))
-            .localCheckpoint()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    // the scratch dir holds both the replay data and the SHARED
+    // checkpoint the two runs resume across; the state is
+    // localCheckpointed per batch, so it outlives the dir
+    Streams.withGateScratch("graft-e15") { scratch =>
+      val data = scratch.resolve("data").toString
+      val ckpt = scratch.resolve("ckpt").toString
+      ev.filter($"event_id" % 2 === 0).drop("event_id")
+        .write.mode("overwrite").parquet(data)
+      var state: DataFrame = null
+      def drain(): Unit = Streams.withGateDrainConf(s) {
+        val stream = s.readStream.schema(ev.drop("event_id").schema).parquet(data)
+        val q = stream.writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: java.lang.Long) =>
+            val part = batch.groupBy($"event_type")
+              .agg(count(lit(1)).as("cnt_n"), sum($"v_scaled").as("sum_v"))
+              .localCheckpoint()
+            state = (if (state == null) part
+              else graft.operators.Cdc.mergePartialAggs(state, part, Seq("event_type")))
+              .localCheckpoint()
+            ()
+          }
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      drain() // run 1: phase A only
+      ev.filter($"event_id" % 2 === 1).drop("event_id")
+        .write.mode("append").parquet(data)
+      drain() // run 2 resumes from the checkpoint: ONLY phase B
+      state
     }
-    drain() // run 1: phase A only
-    ev.filter($"event_id" % 2 === 1).drop("event_id")
-      .write.mode("append").parquet(data)
-    drain() // run 2 resumes from the checkpoint: ONLY phase B
-    // state is localCheckpointed per batch; data + checkpoint dirs are dead
-    graft.etl.Writers.deleteRecursively(base.toFile)
-    state.select($"event_type", $"cnt_n".as("n"), $"sum_v".as("value_scaled"))
+      .select($"event_type", $"cnt_n".as("n"), $"sum_v".as("value_scaled"))
       .orderBy($"event_type")
   }
 
@@ -1693,69 +1688,17 @@ object EventQueries {
       |FROM events e JOIN dim d ON e.event_type = d.event_type
       |GROUP BY 1, 2 ORDER BY 1""".stripMargin
 
-  /** THE shared daily-tier streaming-gate harness (r12, review-driven —
-    * e19/e21/e22/e23/e24 carried five hand-copied 30-line twins of
-    * this, the same hazard the generic
-    * [[graft.streaming.Streams.dailyTierStream]] removed one layer
-    * down): stage the batch as a file-replay source with the
-    * DAY-granularity epoch shift (a day multiple, so day indexes
-    * translate exactly), run `producer`'s stream into a memory sink,
-    * advance the watermark with two far-future sentinel rows (the
-    * first rides batch 0 with the real rows and moves event time past
-    * 2100-01-01, the second's batch fires the day timeouts), stop +
-    * clean up, and return (the sink table, the day offset to subtract
-    * on the way out). A harness change — sentinel timestamps, drain
-    * ordering, cleanup — now lives in exactly one place. */
-  private def runDailyStreamGate(s: SparkSession,
-      ev: org.apache.spark.sql.DataFrame, prefix: String, queryName: String)(
-      producer: org.apache.spark.sql.Dataset[graft.streaming.Streams.Event] =>
-        org.apache.spark.sql.Dataset[_])
-      : (org.apache.spark.sql.DataFrame, Long) = {
+  /** The daily-tier streaming gates' drain (e19, e21–e27): `producer`
+    * over the events replay shifted at DAY granularity (a day
+    * multiple, so day indexes translate exactly) through
+    * [[runShiftedGate]]. Returns the sink table and the day offset to
+    * subtract on the way out. */
+  private def runDailyStreamGate(s: SparkSession, ev: DataFrame, queryName: String)(
+      producer: Dataset[Streams.Event] => Dataset[_]): (DataFrame, Long) = {
     import s.implicits._
-    import graft.streaming.Streams
-    // the watermark sentinels appended below are shaped (user_id, ts,
-    // value) — a differently-shaped `ev` would append schema-mismatched
-    // parquet into the replay dir and fail obscurely mid-drain, so the
-    // contract is asserted here with a clear message (review-caught r12)
-    require(ev.columns.toSeq == Seq("user_id", "ts", "value"),
-      "runDailyStreamGate: staged events must be exactly (user_id, ts, " +
-        s"value) - the sentinel rows share the file-replay dir - got " +
-        s"[${ev.columns.mkString(", ")}]")
-    // staging + checkpoint on the gate-scratch medium (see
-    // Streams.scratchTempDir); staged files in their own subdir so the
-    // file source never lists checkpoint files as input
-    val base = Streams.scratchTempDir(prefix)
-    val tmp = base.resolve("staged").toString
-    val off = Streams.stageWithEpochShift(ev, "ts", tmp,
-      granularitySeconds = 86400L)
-    val stream = Streams.shiftTs(
-      s.readStream.schema(ev.schema).parquet(tmp), "ts", off).as[Streams.Event]
-    def sentinel(sec: Long): Unit =
-      Seq((-1L, new java.sql.Timestamp(sec * 1000L), 0.0))
-        .toDF("user_id", "ts", "value")
-        .write.mode("append").parquet(tmp)
-    // sentinel 1 rides batch 0 with the real rows (r14 drain-cost cut,
-    // see e4): batch 0's end-of-batch watermark already passes every
-    // real day, so the single sentinel-2 round fires all day timeouts;
-    // no-data micro-batches are disabled because the eviction rides
-    // that DATA batch
-    sentinel(4102444800L) // 2100-01-01 advances the watermark
-    Streams.withGateDrainConf(s) {
-      val q = producer(stream)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .format("memory").queryName(queryName).start()
-      try {
-        q.processAllAvailable()
-        sentinel(4102444860L) // second batch fires the timeouts
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.etl.Writers.deleteRecursively(base.toFile)
-      }
-    }
-    (s.table(queryName), off / (86400L * 1000000L))
+    val (table, off) = runShiftedGate(s, ev, 86400L, queryName, eventSentinel(s))(
+      df => producer(df.as[Streams.Event]))
+    (table, off / (86400L * 1000000L))
   }
 
   /** E19: STREAMING exact distinct users per day —
@@ -1773,7 +1716,7 @@ object EventQueries {
     val ev = Tables.load(s, dir, "events")
       .filter($"ts".isNotNull && $"user_id".isNotNull && $"value".isNotNull)
       .select($"user_id", $"ts", $"value")
-    val (streamed, offDays) = runDailyStreamGate(s, ev, "graft-e19", "e19_daily")(
+    val (streamed, offDays) = runDailyStreamGate(s, ev, "e19_daily")(
       graft.streaming.Streams.dailyDistinctStream(_))
     streamed.filter($"distinct_users" > 0)
       .select(expr(s"date_add(DATE '1970-01-01', CAST(day - $offDays AS INT))")
@@ -1811,7 +1754,7 @@ object EventQueries {
       .filter($"ts".isNotNull && $"user_id".isNotNull && $"value".isNotNull &&
         $"user_id" >= 0L) // negative ids are the e-family's sentinel space
       .select($"user_id", $"ts", $"value")
-    val (table, offDays) = runDailyStreamGate(s, ev, "graft-e21", "e21_sketches")(
+    val (table, offDays) = runDailyStreamGate(s, ev, "e21_sketches")(
       graft.streaming.Streams.dailySketchStream(_))
     val streamed = table.select(($"day" - offDays).as("day"), $"sketch")
     // the batch backfill tier: same floorDiv day key (exact pmod form)
@@ -1864,7 +1807,7 @@ object EventQueries {
       .filter($"ts".isNotNull && $"user_id".isNotNull && $"value".isNotNull &&
         $"user_id" >= 0L) // negative ids are the e-family's sentinel space
       .select($"user_id", $"ts", $"value")
-    val (table, offDays) = runDailyStreamGate(s, ev, "graft-e22", "e22_sketches")(
+    val (table, offDays) = runDailyStreamGate(s, ev, "e22_sketches")(
       graft.streaming.Streams.dailyValueSketchStream(_, alpha))
     val streamed = table.select(($"day" - offDays).as("day"), $"sketch")
     // the batch backfill tier + the exact anchors, one scan
@@ -1926,7 +1869,7 @@ object EventQueries {
       .filter($"ts".isNotNull && $"user_id".isNotNull && $"value".isNotNull &&
         $"user_id" >= 0L) // negative ids are the e-family's sentinel space
       .select($"user_id", $"ts", $"value")
-    val (table, offDays) = runDailyStreamGate(s, ev, "graft-e23", "e23_sketches")(
+    val (table, offDays) = runDailyStreamGate(s, ev, "e23_sketches")(
       graft.streaming.Streams.dailyHllSketchStream(_))
     val streamed = table.select(($"day" - offDays).as("day"), $"sketch")
     val batch = ev
@@ -1978,7 +1921,7 @@ object EventQueries {
       .filter($"ts".isNotNull && $"user_id".isNotNull && $"value".isNotNull &&
         $"user_id" >= 0L) // negative ids are the e-family's sentinel space
       .select($"user_id", $"ts", $"value")
-    val (table, offDays) = runDailyStreamGate(s, ev, "graft-e24", "e24_sketches")(
+    val (table, offDays) = runDailyStreamGate(s, ev, "e24_sketches")(
       graft.streaming.Streams.dailyVhistSketchStream(_))
     val streamed = table.select(($"day" - offDays).as("day"), $"sketch")
     val batch = ev
@@ -2040,7 +1983,7 @@ object EventQueries {
       .filter($"ts".isNotNull && $"user_id".isNotNull && $"value".isNotNull &&
         $"user_id" >= 0L) // negative ids are the e-family's sentinel space
       .select($"user_id", $"ts", $"value")
-    val (table, offDays) = runDailyStreamGate(s, ev, "graft-e25", "e25_sketches")(
+    val (table, offDays) = runDailyStreamGate(s, ev, "e25_sketches")(
       graft.streaming.Streams.dailyKmvSketchStream(_, k = 32))
     val streamed = table.select(($"day" - offDays).as("day"), $"sketch")
     val batch = ev
@@ -2102,7 +2045,7 @@ object EventQueries {
       .filter($"ts".isNotNull && $"user_id".isNotNull && $"value".isNotNull &&
         $"user_id" >= 0L) // negative ids are the e-family's sentinel space
       .select($"user_id", $"ts", $"value")
-    val (table, offDays) = runDailyStreamGate(s, ev, "graft-e26", "e26_sketches")(
+    val (table, offDays) = runDailyStreamGate(s, ev, "e26_sketches")(
       graft.streaming.Streams.dailyCmsSketchStream(_))
     val streamed = table.select(($"day" - offDays).as("day"), $"sketch")
     val byDay = ev
@@ -2196,7 +2139,7 @@ object EventQueries {
     require(ids.length == 1,
       s"e27: dictionary carries ${ids.length} lineage ids - corrupt build")
     val dictId = ids.head
-    val (table, offDays) = runDailyStreamGate(s, ev, "graft-e27", "e27_sketches")(
+    val (table, offDays) = runDailyStreamGate(s, ev, "e27_sketches")(
       graft.streaming.Streams.dailyCodedSketchStream(_, dict, "k", "code", dictId))
     val streamed = table.select(($"day" - offDays).as("day"), $"sketch")
     val batch = coded
@@ -2339,99 +2282,29 @@ object EventQueries {
       |FROM ev e JOIN dim d ON e.k = d.k
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** Shared machinery for the REAL outer stream-stream attribution
-    * joins (e13 leftOuter, e16 fullOuter): stage clicks/purchases to
-    * parquet, run Streams.attributionJoin as a streaming query into a
-    * memory sink, stage the first far-future sentinel WITH the real
-    * rows and push one more through BOTH sources (advances both
-    * watermarks past every real row's window so each side's unmatched
-    * rows flush — the e4 pattern), then read the
-    * sink minus the self-matching sentinel (filtered on the user key,
-    * which attributionJoin coalesces across sides for outer types).
-    * One copy so a future fix to the sentinel/drain discipline — the
-    * r7 watermark-boundary class of bug — can't silently diverge
-    * between the two join types. */
+  /** Shared machinery for the REAL outer and semi stream-stream
+    * attribution joins (e13 leftOuter, e16 fullOuter, e20 leftSemi):
+    * [[stageClicksPurchases]], the far-future sentinel staged on BOTH
+    * sides and a click-side flush row (see Streams.gateDrain for why
+    * one side suffices), then the sink minus the self-matching
+    * sentinel (filtered on the user key, which attributionJoin
+    * coalesces across sides for outer types). */
   private def runAttributionStream(s: SparkSession, dir: String,
       joinType: String, queryName: String): DataFrame = {
     import s.implicits._
-    import graft.streaming.Streams
-    val ev = Tables.load(s, dir, "events")
-      .select($"event_id", $"user_id", $"ts", $"event_type")
-    // staging + checkpoint live on the gate-scratch medium (tmpfs when
-    // available): transient per-run state, deleted in the finally —
-    // see Streams.scratchTempDir for the measured 50× commit-latency win
-    val base = Streams.scratchTempDir(s"graft-$queryName")
-    // ONE staging pass (r13): both sides come out of a single
-    // partitionBy write (the partition column stays out of the data
-    // files, so the staged schema is unchanged) — the previous
-    // two filtered writes scanned the events table twice
-    val stagedDir = base.resolve("staged").toString
-    ev.filter($"event_type".isin("click", "purchase"))
-      .write.mode("overwrite").partitionBy("event_type").parquet(stagedDir)
-    // literal partition paths are safe ONLY for these two fixed values
-    // (advisor note, r13): Spark percent-escapes special characters in
-    // partition directory names — a new event_type must extend the
-    // isin list AND the literal-dir pairing together
-    val cDir = s"$stagedDir/event_type=click"
-    val pDir = s"$stagedDir/event_type=purchase"
-    // a side with zero staged rows writes no partition directory; the
-    // stream reader needs the path to exist (the sentinel rows append
-    // into it later either way)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cDir))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pDir))
-    val sch = ev.drop("event_type").schema
-    val joined =
-      if (joinType == "leftSemi")
-        Streams.attributionSemiJoin(
-          s.readStream.schema(sch).parquet(cDir),
-          s.readStream.schema(sch).parquet(pDir))
-      else Streams.attributionJoin(
-        s.readStream.schema(sch).parquet(cDir),
-        s.readStream.schema(sch).parquet(pDir),
-        joinType = joinType)
-    // sentinel user -1 at 2100: advances BOTH watermarks past every
-    // real row's window; its own self-match filters out below
-    def sentinel(sec: Long): Unit = {
-      val row = Seq((-1L, -1L, new java.sql.Timestamp(sec * 1000L)))
+    def sentinel(sec: Long): DataFrame =
+      Seq((-1L, -1L, new java.sql.Timestamp(sec * 1000L)))
         .toDF("event_id", "user_id", "ts")
-      row.write.mode("append").parquet(cDir)
-      row.write.mode("append").parquet(pDir)
-    }
-    // sentinel 1 is staged WITH the real rows (r14 drain-cost cut,
-    // measured per batch: the old drain ran EIGHT micro-batches — real
-    // data, two sentinel rounds whose two per-side appends even split
-    // into separate batches under the trigger poll race, plus no-data
-    // batches — at a profiled ~3-4 s of fixed state-store machinery per
-    // batch, data or not; `perfbench/run.py --workload stream_drains
-    // --trace 1` re-measures them as `stream.batches` and
-    // `stream.commit_s`). The watermark computed at the
-    // END of batch 0 already passes every real row's join window on
-    // both sides (both sides carry sentinel 1, so the min-policy query
-    // watermark advances), so ONE more data batch flushes all
-    // unmatched-row state. That batch needs only a single row on ONE
-    // side — the watermark it applies was set by batch 0 — which also
-    // removes the two-append trigger race. No-data micro-batches are
-    // disabled because the flush rides that DATA batch.
-    sentinel(4102444800L) // 2100-01-01, rides batch 0 on both sides
-    Streams.withGateDrainConf(s) {
-      val q = joined.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .format("memory").queryName(queryName).start()
-      try {
-        q.processAllAvailable()
-        // batch 1: one click-side row fires the flush of BOTH sides'
-        // unmatched state (its own join state is filtered as user -1)
-        Seq((-1L, -1L, new java.sql.Timestamp(4102444860L * 1000L)))
-          .toDF("event_id", "user_id", "ts")
-          .write.mode("append").parquet(cDir)
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.etl.Writers.deleteRecursively(base.toFile)
+    val out = Streams.gateDrain(queryName, OutputMode.Append,
+        Some(scratch => sentinel(4102444860L).write.mode("append")
+          .parquet(sideDir(scratch, "click")))) { scratch =>
+      val (clicks, purchases) = stageClicksPurchases(s, dir, scratch)
+      Seq("click", "purchase").foreach { side => // rides batch 0
+        sentinel(4102444800L).write.mode("append").parquet(sideDir(scratch, side))
       }
-    }
-    val out = s.table(queryName).filter($"user_id" =!= -1L)
+      if (joinType == "leftSemi") Streams.attributionSemiJoin(clicks, purchases)
+      else Streams.attributionJoin(clicks, purchases, joinType = joinType)
+    }.filter($"user_id" =!= -1L)
     if (joinType == "leftSemi")
       out.select($"click_id", $"user_id").orderBy($"click_id")
     else out
@@ -2511,22 +2384,15 @@ object EventQueries {
     * the whole (finite) stream must equal the batch formulation. */
   val e7StreamStatic: Q = (s, dir) => {
     import s.implicits._
-    import graft.streaming.Streams
     val ev = Tables.load(s, dir, "events")
       .select($"event_type", $"value")
-    val base = Streams.scratchTempDir("graft-e7") // gate-scratch medium
-    val tmp = base.resolve("staged").toString
-    ev.write.mode("overwrite").parquet(tmp)
-    val typeDim = ev.select($"event_type").distinct()
-      .withColumn("weight", length($"event_type").cast("long"))
-    val stream = s.readStream.schema(ev.schema).parquet(tmp)
-    Streams.withGateDrainConf(s) {
-      Streams.runOnce(Streams.enrichedTypeTotals(stream, typeDim),
-        "e7_enriched", org.apache.spark.sql.streaming.OutputMode.Complete,
-        checkpointDir = Some(base.resolve("ckpt").toString))
+    Streams.gateDrain("e7_enriched", OutputMode.Complete, None) { scratch =>
+      val staged = scratch.resolve("staged").toString
+      ev.write.mode("overwrite").parquet(staged)
+      val typeDim = ev.select($"event_type").distinct()
+        .withColumn("weight", length($"event_type").cast("long"))
+      Streams.enrichedTypeTotals(s.readStream.schema(ev.schema).parquet(staged), typeDim)
     }
-    graft.etl.Writers.deleteRecursively(base.toFile)
-    s.table("e7_enriched")
       .select($"event_type", $"weight", $"n", $"value_scaled")
       .orderBy($"event_type")
   }
@@ -2568,49 +2434,29 @@ object EventQueries {
     * has passed its end, so the result set is exactly the finalized
     * windows. A far-future sentinel staged with the real rows plus one
     * sentinel round advance the watermark past every real window and
-    * fire the evictions (the e4 pattern).
+    * fire the evictions ([[runShiftedGate]], shared with e4).
     * Counts only — a streamed double sum accumulates in arrival
     * order and can never be hash-compared across engines. Oracle:
     * the batch tumbling aggregation (window starts are clock hours,
     * compared as exact epoch micros). */
   val e11StreamTumbling: Q = (s, dir) => {
     import s.implicits._
-    import graft.streaming.Streams
     val ev = Tables.load(s, dir, "events").select($"ts", $"event_type", $"value")
     // pre-epoch option (see e4): the hour-multiple offset keeps the
     // tumbling windows aligned, so shifting back recovers the batch
     // window starts exactly; 0 (inert) on post-epoch data
-    val base = Streams.scratchTempDir("graft-e11") // gate-scratch medium
-    val tmp = base.resolve("staged").toString
-    val off = Streams.stageWithEpochShift(ev, "ts", tmp)
-    val stream = Streams.shiftTs(
-      s.readStream.schema(ev.schema).parquet(tmp), "ts", off)
-    def sentinel(sec: Long): Unit =
-      Seq((new java.sql.Timestamp(sec * 1000L), "__sentinel", 0.0))
-        .toDF("ts", "event_type", "value")
-        .write.mode("append").parquet(tmp)
-    // sentinel 1 rides batch 0 with the real rows; one sentinel round
-    // fires the evictions, no-data batches disabled (the r14 drain-cost
-    // cut — see e4's comment for the watermark argument)
-    sentinel(4102444800L) // 2100-01-01: watermark passes every real window
-    Streams.withGateDrainConf(s) {
-      val q = Streams.windowedCounts(stream)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .format("memory").queryName("e11_win").start()
-      try {
-        q.processAllAvailable()
-        sentinel(4102444860L) // batch 1 fires the evictions
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.etl.Writers.deleteRecursively(base.toFile)
-      }
-    }
-    s.table("e11_win").filter($"event_type" =!= "__sentinel")
+    val (table, off) = runShiftedGate(s, ev, 3600L, "e11_win",
+      windowSentinel(s))(Streams.windowedCounts)
+    table.filter($"event_type" =!= "__sentinel")
       .select((unix_micros($"hour_start") - off).as("hs_us"), $"event_type", $"n")
       .orderBy($"hs_us", $"event_type")
+  }
+
+  /** The watermark sentinel of the (ts, event_type, value) window
+    * gates e11 and e17: its own event type, filtered from the sink. */
+  private def windowSentinel(s: SparkSession)(ts: java.sql.Timestamp): DataFrame = {
+    import s.implicits._
+    Seq((ts, "__sentinel", 0.0)).toDF("ts", "event_type", "value")
   }
 
   val e11StreamTumblingSql: String =
@@ -2622,43 +2468,16 @@ object EventQueries {
     * query in Append mode — e11's discipline applied to OVERLAPPING
     * windows (1 hour every 30 minutes), the streaming path where each
     * event updates TWO window states and eviction must finalize both.
-    * Same staging/epoch-shift/sentinel machinery as e11 (the shift's
+    * Same [[runShiftedGate]] stage and flush steps as e11 (the shift's
     * 1-hour granularity is a multiple of the 30-minute slide, so
     * window starts translate exactly). Oracle: e3's batch sliding
     * enumeration — two floor-aligned starts per event. */
   val e17StreamSliding: Q = (s, dir) => {
     import s.implicits._
-    import graft.streaming.Streams
     val ev = Tables.load(s, dir, "events").select($"ts", $"event_type", $"value")
-    val base = Streams.scratchTempDir("graft-e17") // gate-scratch medium
-    val tmp = base.resolve("staged").toString
-    val off = Streams.stageWithEpochShift(ev, "ts", tmp)
-    val stream = Streams.shiftTs(
-      s.readStream.schema(ev.schema).parquet(tmp), "ts", off)
-    def sentinel(sec: Long): Unit =
-      Seq((new java.sql.Timestamp(sec * 1000L), "__sentinel", 0.0))
-        .toDF("ts", "event_type", "value")
-        .write.mode("append").parquet(tmp)
-    // sentinel 1 rides batch 0 with the real rows; one sentinel round
-    // fires the evictions, no-data batches disabled (the r14 drain-cost
-    // cut — see e4's comment for the watermark argument)
-    sentinel(4102444800L) // 2100-01-01: watermark passes every real window
-    Streams.withGateDrainConf(s) {
-      val q = Streams.slidingCounts(stream)
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", base.resolve("ckpt").toString)
-        .format("memory").queryName("e17_win").start()
-      try {
-        q.processAllAvailable()
-        sentinel(4102444860L) // batch 1 fires the evictions
-        q.processAllAvailable()
-      } finally {
-        q.stop()
-        graft.etl.Writers.deleteRecursively(base.toFile)
-      }
-    }
-    s.table("e17_win").filter($"event_type" =!= "__sentinel")
+    val (table, off) = runShiftedGate(s, ev, 3600L, "e17_win",
+      windowSentinel(s))(Streams.slidingCounts)
+    table.filter($"event_type" =!= "__sentinel")
       .select((unix_micros($"win_start") - off).as("ws_us"), $"event_type", $"n")
       .orderBy($"ws_us", $"event_type")
   }
@@ -2676,14 +2495,6 @@ object EventQueries {
       |GROUP BY 1, 2
       |ORDER BY ws_us, event_type""".stripMargin
 
-  /** E12: streaming dedup in the gate — documents (with injected
-    * exact duplicates) replayed through `dropDuplicatesWithinWatermark`
-    * on the canonical fingerprint. WHICH copy survives depends on
-    * arrival order (legitimately nondeterministic), so the gate
-    * checks the arrival-order-free contract instead: exactly ONE
-    * survivor per batch-distinct fingerprint, none missing, none
-    * extra. The oracle replays the fingerprint (shared md5 canon
-    * formula with t4) over the same injected corpus. */
   /** J11: point-in-time feature lookup with MAX STALENESS — the
     * feature-store "ASOF ... TOLERANCE" rule on [[AsOfJoin.leftAsOf]]'s
     * new tolerance parameter: each purchase attaches its user's latest
@@ -2812,9 +2623,16 @@ object EventQueries {
        |FROM p LEFT JOIN m USING (purchase_id)
        |ORDER BY purchase_id""".stripMargin
 
+  /** E12: streaming dedup in the gate — documents (with injected
+    * exact duplicates) replayed through `dropDuplicatesWithinWatermark`
+    * on the canonical fingerprint. WHICH copy survives depends on
+    * arrival order (legitimately nondeterministic), so the gate
+    * checks the arrival-order-free contract instead: exactly ONE
+    * survivor per batch-distinct fingerprint, none missing, none
+    * extra. The oracle replays the fingerprint (shared md5 canon
+    * formula with t4) over the same injected corpus. */
   val e12StreamDedup: Q = (s, dir) => {
     import s.implicits._
-    import graft.streaming.Streams
     val d0 = Tables.load(s, dir, "documents").select($"doc_id", $"text")
     val docs = d0.unionByName(
         d0.filter($"doc_id" % 10 === 0)
@@ -2822,16 +2640,11 @@ object EventQueries {
       // deterministic synthetic event time inside one dedup horizon;
       // offset past epoch 0 (a row AT the initial watermark is late)
       .withColumn("ts", timestamp_micros(($"doc_id" % 600L + 3600L) * 1000000L))
-    val base = Streams.scratchTempDir("graft-e12") // gate-scratch medium
-    val tmp = base.resolve("staged").toString
-    docs.write.mode("overwrite").parquet(tmp)
-    val stream = s.readStream.schema(docs.schema).parquet(tmp)
-    Streams.withGateDrainConf(s) {
-      Streams.runOnce(Streams.dedupStream(stream), "e12_dedup",
-        checkpointDir = Some(base.resolve("ckpt").toString))
+    Streams.gateDrain("e12_dedup", OutputMode.Append, None) { scratch =>
+      val staged = scratch.resolve("staged").toString
+      docs.write.mode("overwrite").parquet(staged)
+      Streams.dedupStream(s.readStream.schema(docs.schema).parquet(staged))
     }
-    graft.etl.Writers.deleteRecursively(base.toFile)
-    s.table("e12_dedup")
       .groupBy($"fp").agg(count(lit(1)).as("n_survivors"))
       .orderBy($"fp")
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -45,88 +46,140 @@ object Streams {
       .schema(Schemas.articleSchema)
       .json(landingDir)
 
-  /** Scratch root for the finite gate drains' TRANSIENT streaming state
-    * (file-replay staging dirs + state-store checkpoints). These dirs
-    * live for exactly one query run and are deleted in the same
-    * closure, so they belong on the fastest local medium available: on
-    * the ext4-on-virtio sandbox the HDFS-backed state store's many
-    * small atomic file commits (4 stores × |shuffle partitions| per
-    * micro-batch for a stream-stream join) measured ~600 ms EACH —
-    * ~75 s of summed commit time per micro-batch, the dominant share
-    * of e13's fixed drain cost — vs ~1.4 s summed on tmpfs
-    * (r14 A/B: e13 12.4 s → 5.6 s end to end; `perfbench/run.py
-    * --workload stream_drains --trace 1` re-measures this cost as
-    * `stream.commit_s`). Override with $SPARK_GRAFT_STREAM_SCRATCH;
-    * defaults to /dev/shm when writable (Linux), else java.io.tmpdir.
-    * Nothing written here outlives the query run — no result or
-    * intermediate is ever reused across runs. Production streams
-    * checkpoint to reliable shared storage for recovery; this path
-    * exists only for the single-node stage-drain-delete gate harness,
-    * where recovery is meaningless. */
-  def scratchTempDir(prefix: String): java.nio.file.Path = {
-    val root = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")
-      .map(java.nio.file.Paths.get(_))
-      .orElse {
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm)) Some(shm) else None
-      }
-    root match {
-      case Some(r) => java.nio.file.Files.createTempDirectory(r, prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
-    }
+  // ---- the gate-drain harness --------------------------------------
+
+  /** Where [[withGateScratch]] makes its dirs: $SPARK_GRAFT_STREAM_SCRATCH
+    * when set, else /dev/shm when writable (Linux tmpfs), else
+    * java.io.tmpdir. */
+  private[graft] def gateScratchRoot: Path =
+    sys.env.get("SPARK_GRAFT_STREAM_SCRATCH").map(Paths.get(_))
+      .orElse(Some(Paths.get("/dev/shm"))
+        .filter(p => Files.isDirectory(p) && Files.isWritable(p)))
+      .getOrElse(Paths.get(System.getProperty("java.io.tmpdir")))
+
+  /** Run `body` on a fresh `prefix*` dir under [[gateScratchRoot]] and
+    * delete the dir when `body` returns or throws. It holds a finite
+    * gate drain's transient state: the staged replay files and the
+    * state-store checkpoint. Both live for exactly one query run, so
+    * they belong on the fastest local medium: on an ext4-on-virtio
+    * disk the HDFS-backed state store's many small atomic file
+    * commits (4 stores × |shuffle partitions| per micro-batch for a
+    * stream-stream join) measured ~600 ms EACH, ~75 s of summed commit
+    * time per micro-batch and the dominant share of e13's fixed drain
+    * cost, against ~1.4 s summed on tmpfs (r14 A/B: e13 12.4 s → 5.6 s
+    * end to end; `perfbench/run.py --workload stream_drains --trace 1`
+    * re-measures it as `stream.commit_s`). /dev/shm is RAM, so a dir
+    * left behind by a failed drain costs memory until reboot: the
+    * delete is in a `finally`, and no caller gets a dir without it.
+    * Production streams checkpoint to reliable shared storage; this is
+    * for the single-node stage-drain-delete gate harness, where
+    * recovery is meaningless. */
+  def withGateScratch[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(gateScratchRoot, prefix)
+    try body(dir)
+    finally graft.etl.Writers.deleteRecursively(dir.toFile)
   }
 
-  /** Run `body` (a finite gate-drain of a streaming query) with
-    * no-data micro-batches disabled, restoring the previous setting
-    * after (r14 drain-cost work, guide §1/§2: every micro-batch of a
-    * stateful query pays fixed planning + a full state-store
-    * commit round across all shuffle partitions, so batches that
-    * carry no data are pure overhead here). Safe for the gate drains
-    * because every one of them fires its final state eviction from a
-    * DATA batch — the far-future sentinel round — never from a
-    * watermark-only empty batch; long-lived production streams should
-    * keep the default (their evictions DO ride no-data batches). */
-  def withNoDataBatchesDisabled[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Full session conf for a finite gate drain, set before `start()`
-    * (a streaming query CLONES the session at start, so the settings
-    * apply to exactly this query) and restored after: no-data
-    * micro-batches off ([[withNoDataBatchesDisabled]]) and a SMALL
-    * state-partition count. Every state partition costs fixed
-    * machinery per micro-batch — a shuffle file pair plus one commit
-    * per state store (a stream-stream join carries FOUR stores per
-    * partition) — measured ~linear in the partition count and
-    * independent of data: e13's two-batch drain timed 9.7 s at 32
-    * state partitions vs 4.0 s at 4 (quiet host, tmpfs scratch,
-    * r14; re-measure with `perfbench/run.py --workload stream_drains
-    * --trace 1`). The gate drains process one bounded staged relation
-    * and die, so the count is derived and deliberately small:
-    * min(session shuffle partitions, 4). Production streams size state
-    * partitions to state volume per executor through the same conf.
-    * Only the STREAM runs under this conf: staging writes before and
+  /** Run `body` (a finite gate drain) with the drain's session conf, set
+    * before `start()` (a streaming query CLONES the session conf at
+    * start, so the settings apply to exactly this query) and restored
+    * after. Only the stream runs under it: staging writes before and
     * sink read-backs after a drain keep the session's batch
-    * parallelism. */
+    * parallelism.
+    *  - A small state-partition count, min(session shuffle partitions,
+    *    4). Every state partition costs fixed machinery per
+    *    micro-batch, a shuffle file pair plus one commit per state
+    *    store (a stream-stream join carries FOUR stores per
+    *    partition), measured ~linear in the partition count and
+    *    independent of data: e13's two-batch drain timed 9.7 s at 32
+    *    state partitions vs 4.0 s at 4 (quiet host, tmpfs scratch,
+    *    r14). The drains process one bounded staged relation and die,
+    *    so the count is derived, not configured. Production streams
+    *    size state partitions to state volume per executor through
+    *    the same conf.
+    *  - No-data micro-batches off. Every micro-batch of a stateful
+    *    query pays fixed planning plus a full state-store commit round
+    *    across all shuffle partitions, so batches that carry no data
+    *    are pure overhead here. That is safe because every gate fires
+    *    its final state eviction from a DATA batch (the flush step of
+    *    [[gateDrain]]), never from a watermark-only empty batch.
+    *    Long-lived production streams keep the default: their
+    *    evictions DO ride no-data batches. */
   def withGateDrainConf[T](spark: SparkSession)(body: => T): T = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.getOption(pKey)
-    val drainParts = math.min(prevParts.map(_.toInt).getOrElse(200), 4)
-    spark.conf.set(pKey, drainParts.toString)
-    try withNoDataBatchesDisabled(spark)(body)
-    finally prevParts match {
-      case Some(v) => spark.conf.set(pKey, v)
-      case None => spark.conf.unset(pKey)
+    val parts = "spark.sql.shuffle.partitions"
+    val drainConf = Seq(
+      parts -> math.min(spark.conf.getOption(parts).map(_.toInt).getOrElse(200), 4).toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    val prev = drainConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    drainConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** THE gate drain: run a finite streaming query to completion in a
+    * memory sink named `queryName` and return that sink's table. The
+    * steps, each written only here:
+    *  1. in a [[withGateScratch]] dir `graft-<queryName>*`, `stage`
+    *     writes the input (by convention under `<scratch>/staged`, so
+    *     the file source never lists checkpoint files as input), plus
+    *     any first sentinel that rides batch 0, and returns the stream;
+    *  1. under [[withGateDrainConf]], the stream `start()`s into the
+    *     memory sink in `mode`, its checkpoint at `<scratch>/ckpt`;
+    *  1. `processAllAvailable`;
+    *  1. `flush`, if given, writes the second sentinel, then
+    *     `processAllAvailable` again;
+    *  1. the query stops in a `finally`, and the scratch dir is deleted
+    *     in one, so a stage step or a drain that throws leaves neither
+    *     a live query in the session nor staged input on the medium.
+    *
+    * Sentinels. A gate that flushes on event time (an Append-mode
+    * window, a session or day timeout, an outer join's unmatched rows)
+    * stages a far-future sentinel row (2100-01-01) WITH the real rows:
+    * the watermark computed at the END of batch 0 then already passes
+    * every real row's window, so ONE flush round, whose data batch
+    * fires the evictions, replaces the two sentinel rounds the gates
+    * ran before r14 (each extra round is a parquet write plus a full
+    * stateful micro-batch of fixed machinery). The two-sided
+    * attribution joins stage sentinel 1 on BOTH sides, so the
+    * min-policy query watermark advances; their flush writes a single
+    * click-side row, since the watermark it applies was set by batch
+    * 0. Their old drain ran EIGHT micro-batches (real data, two
+    * sentinel rounds whose two per-side appends even split into
+    * separate batches under the trigger poll race, plus no-data
+    * batches) at a profiled ~3-4 s of fixed state-store machinery per
+    * batch, data or not; `perfbench/run.py --workload stream_drains
+    * --trace 1` re-measures them as `stream.batches` and
+    * `stream.commit_s`. Gates whose output emits within the batch (an
+    * inner or stream-static join, dedup, a Complete aggregate) pass no
+    * flush.
+    *
+    * Scope. The scratch-dir replay and the memory-sink collect exist to
+    * hand the verifier a comparable DataFrame: they are the gate's test
+    * rig, not the deployment topology. The operators in this object
+    * are source- and sink-agnostic; production reads a durable shared
+    * source (object store, Kafka), writes a checkpointed parquet or
+    * foreachBatch sink, and no result relation is collected
+    * (StreamsSpec's restart tests run that shape). */
+  def gateDrain(queryName: String, mode: OutputMode, flush: Option[Path => Unit])(
+      stage: Path => Dataset[_]): DataFrame =
+    withGateScratch(s"graft-$queryName") { scratch =>
+      val stream = stage(scratch)
+      val spark = stream.sparkSession
+      withGateDrainConf(spark) {
+        val q = stream.writeStream
+          .outputMode(mode)
+          .option("checkpointLocation", scratch.resolve("ckpt").toString)
+          .format("memory").queryName(queryName).start()
+        try {
+          q.processAllAvailable()
+          flush.foreach { f => f(scratch); q.processAllAvailable() }
+        } finally q.stop()
+      }
+      spark.table(queryName)
+    }
 
   /** e1's streaming form: event-time tumbling window with watermark.
     *
@@ -207,7 +260,8 @@ object Streams {
     * the epoch-shift offset from the SAME write via an `Observation` —
     * zero extra scans. Returns the offset (0 = inert, post-epoch data);
     * pass it to [[shiftTs]] on the stream and subtract it from output
-    * instants. The one staging-and-offset implementation e4/e11 share. */
+    * instants. The shifted stream gates (e4, e11, e17, the daily tiers)
+    * stage through it. */
   def stageWithEpochShift(df: DataFrame, tsCol: String, dir: String,
       granularitySeconds: Long = 3600L): Long = {
     val obs = org.apache.spark.sql.Observation()
@@ -766,27 +820,6 @@ object Streams {
       .groupBy(col("event_type"), col("weight"))
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(round(value * 10000) AS BIGINT)")).as("value_scaled"))
-
-  /** Drain a file-source stream to a memory sink synchronously (test /
-    * AvailableNow harness). Aggregations need Complete — in Append a
-    * watermarked window only emits after the watermark passes it,
-    * which a single static batch never does. */
-  def runOnce(df: DataFrame, queryName: String,
-      mode: OutputMode = OutputMode.Append,
-      checkpointDir: Option[String] = None): Unit = {
-    val w0 = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(queryName)
-    // gate drains pass a scratch-medium checkpoint ([[scratchTempDir]])
-    // so the per-batch state/offset commits never pay slow-disk latency
-    val q = checkpointDir.fold(w0)(d => w0.option("checkpointLocation", d))
-      .start()
-    // finally: an exception from processAllAvailable must not leak a
-    // live query (and its state/memory sink) into the shared session
-    try q.processAllAvailable()
-    finally q.stop()
-  }
 
   /** foreachBatch idempotent MERGE sink — exactly-once TABLE semantics
     * on top of at-least-once micro-batch delivery, the production way

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Byte-level CSV quoting parity with the reference's pandas `to_csv`
   * (DB/ETL.ipynb c52): RFC 4180 — quote fields containing delimiter,
@@ -17,12 +17,12 @@ import graft.TestSpark
   * reference file itself, plus a synthetic stress row covering the
   * newline case the reference data happens not to exercise.
   */
-class CsvParitySpec extends AnyFunSuite {
+class CsvParitySpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private def writtenText(rows: Seq[(Long, String, String, String)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("csv").toString
     Writers.writeCsv(
       rows.toDF("AuthorID", "FullName", "Country", "University"),
       dir, singleFile = true)

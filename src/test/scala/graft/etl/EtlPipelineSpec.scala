@@ -4,17 +4,17 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** End-to-end pipeline over the FIXTURES.md-shaped files of
   * [[EtlFixtures]]: the four raw-file variants with sentinels, mixed
   * Day/Year types, mojibake, emails in countries, empty arrays and
   * null citations — the reference's mess.
   */
-class EtlPipelineSpec extends AnyFunSuite {
+class EtlPipelineSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
-  lazy val dir: Path = Files.createTempDirectory("graft-fixtures")
+  lazy val dir: Path = tempDir("fixtures")
 
   lazy val merged = Ingest.readMerged(spark, EtlFixtures.writeAll(dir))
   lazy val clean = Clean(merged)

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Per-JVM observability for the mock fetcher (local mode shares the
   * JVM, so executors and the spec see the same statics). Top-level —
@@ -51,7 +51,7 @@ class MockFetcher extends Fetch.Fetcher {
   * Clean end-to-end — the extract stage feeds the SAME pipeline the
   * landing-dir path does.
   */
-class FetchSpec extends AnyFunSuite {
+class FetchSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("fetch: per-URL errors quarantine, retries recover flaky URLs, dedup applies") {
@@ -98,7 +98,7 @@ class FetchSpec extends AnyFunSuite {
   test("extract end-to-end: mock-fetched articles flow through Ingest → Clean") {
     import spark.implicits._
     FetchCounters.reset()
-    val dir = java.nio.file.Files.createTempDirectory("graft-fetch").toString
+    val dir = tempDir("fetch").toString
     val urls = Seq("https://x/e1", "https://x/e2", "https://x/junk", "https://x/dead").toDS()
     Fetch.extract(urls, new MockFetcher, dir, parallelism = 2)
 

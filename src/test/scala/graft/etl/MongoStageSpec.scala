@@ -1,6 +1,5 @@
 package graft.etl
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
@@ -8,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** MongoDB extended-JSON staging codec (SURVEY S2/K3 file equivalent).
   *
@@ -19,7 +18,7 @@ import graft.TestSpark
   * MongoStage's scaladoc); (4) the relaxed ISO `$date` form parses;
   * (5) `objectId` is deterministic.
   */
-class MongoStageSpec extends AnyFunSuite {
+class MongoStageSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   private val schema = StructType(Seq(
@@ -29,7 +28,7 @@ class MongoStageSpec extends AnyFunSuite {
 
   private def roundTrip(rows: Seq[(Long, String, Integer, java.lang.Double, Timestamp)]): Seq[Row] = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-mongo").toString
+    val dir = tempDir("mongo").toString
     val df = rows.toDF("doc_id", "text", "n", "score", "at")
     MongoStage.writeExtJsonl(df, "doc_id", dir)
     MongoStage.readExtJsonl(spark, dir, schema)
@@ -88,7 +87,7 @@ class MongoStageSpec extends AnyFunSuite {
   }
 
   test("relaxed ISO $date form (mongoexport default) parses too") {
-    val dir = Files.createTempDirectory("graft-mongo-rel").toString
+    val dir = tempDir("mongo-rel").toString
     import spark.implicits._
     Seq("""{"_id":{"$oid":"aaaaaaaaaaaaaaaaaaaaaaaa"},"doc_id":{"$numberLong":"5"},"at":{"$date":"2024-05-13T10:00:00.000Z"}}""")
       .toDF("value").write.mode("overwrite").text(dir)
@@ -120,7 +119,7 @@ class MongoStageSpec extends AnyFunSuite {
   }
 
   test("an over-Long numeric $date nulls the field instead of killing the job (ANSI)") {
-    val dir = Files.createTempDirectory("graft-mongo-big").toString
+    val dir = tempDir("mongo-big").toString
     import spark.implicits._
     Seq("""{"doc_id":{"$numberLong":"6"},"at":{"$date":{"$numberLong":"92233720368547758080"}}}""")
       .toDF("value").write.mode("overwrite").text(dir)
@@ -134,7 +133,7 @@ class MongoStageSpec extends AnyFunSuite {
     // BSON dates are epoch-millis; toExtJson's unix_millis truncates
     // the 456 µs tail. This pins the documented contract so a future
     // "fix" to micros doesn't silently break mongoimport compatibility.
-    val dir = Files.createTempDirectory("graft-mongo-us").toString
+    val dir = tempDir("mongo-us").toString
     import spark.implicits._
     val micros = 1715594400123456L // 2024-05-13T10:00:00.123456Z
     val df = Seq(Tuple1(1L)).toDF("doc_id")

@@ -2,18 +2,18 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Proves the SCALING.md claim that pre-bucketed tables make the
   * fact/dim join shuffle-free: both sides bucketed on the join key →
   * the physical plan contains no Exchange.
   */
-class BucketingSpec extends AnyFunSuite {
+class BucketingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
 
   test("partitionBy layout prunes partitions at scan time") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("part").toString
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "source", "n_chars")
     docs.write.mode("overwrite").partitionBy("source").parquet(dir)

@@ -3,11 +3,11 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
 /** Hand-computed invariants for the round-4 query operators, beyond
   * the DuckDB oracle (which proves engine parity, not intent). */
-class Round4OpsSpec extends AnyFunSuite {
+class Round4OpsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -18,7 +18,7 @@ class Round4OpsSpec extends AnyFunSuite {
     // gives C(4,2)=6 edges, C(4,3)=4 triangles
     val li = Seq.tabulate(4)(i => (1L, (i + 1).toLong))
       .toDF("l_orderkey", "l_suppkey")
-    val dir = java.nio.file.Files.createTempDirectory("graft-k4").toString
+    val dir = tempDir("k4").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val m = AdvancedOps.an17Triangles(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -92,7 +92,7 @@ class Round4OpsSpec extends AnyFunSuite {
     // user 1 x10, user 2 x5, users 3..7 x1 -> 20 rows over 7 keys
     val rows = (Seq.fill(10)(1L) ++ Seq.fill(5)(2L) ++ (3L to 7L)).zipWithIndex
       .map { case (u, i) => (u, i.toLong, new java.sql.Timestamp(1700000000000L + i)) }
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = tempDir("skew").toString
     rows.toDF("user_id", "event_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = AdvancedOps.an32SkewReport(spark, dir).collect()

@@ -5,9 +5,9 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
-class SourceQueriesSpec extends AnyFunSuite {
+class SourceQueriesSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -19,7 +19,7 @@ class SourceQueriesSpec extends AnyFunSuite {
   }
 
   test("s15: dynamic overwrite replaces ONLY the targeted partition's files") {
-    val base = Files.createTempDirectory("graft-s15-spec")
+    val base = tempDir("s15-spec")
     val out = base.resolve("t").toString
     val df = Seq((1, 2020, 10.0), (2, 2020, 20.0), (3, 2021, 30.0), (4, 2022, 40.0))
       .toDF("id", "y", "v")
@@ -44,7 +44,7 @@ class SourceQueriesSpec extends AnyFunSuite {
   test("s15: static overwrite mode would have dropped the other partitions") {
     // the failure the dynamic option exists to prevent — pinned so a
     // future Spark default change can't silently alter s15's meaning
-    val base = Files.createTempDirectory("graft-s15-static")
+    val base = tempDir("s15-static")
     val out = base.resolve("t").toString
     val df = Seq((1, 2020, 10.0), (2, 2021, 20.0)).toDF("id", "y", "v")
     df.write.mode("overwrite").partitionBy("y").parquet(out)

@@ -1,34 +1,41 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TempDirs, TestSpark}
 
-class StreamsSpec extends AnyFunSuite {
+class StreamsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("article file stream ingests incrementally with the explicit schema") {
-    val dir = Files.createTempDirectory("graft-stream")
-    def land(name: String, lines: String*): Unit =
-      Files.write(dir.resolve(name),
+    def land(scratch: Path, name: String, lines: String*): Unit =
+      Files.write(Files.createDirectories(scratch.resolve("landing")).resolve(name),
         lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    land("batch1.json",
-      """{"title": "S1", "doi": "d1", "topic": "AI", "citations": 1}""",
-      """{"title": "S2", "doi": "d2", "topic": "IoT", "citations": 2}""")
-    val stream = Streams.articleStream(spark, dir.toString)
-    assert(stream.isStreaming)
-    Streams.runOnce(stream.select("doi", "topic", "citations"), "arts1")
-    assert(spark.sql("SELECT count(*) FROM arts1").collect().head.getLong(0) === 2)
-    // second file lands → incremental pickup, no reprocessing
-    land("batch2.json",
-      """{"title": "S3", "doi": "d3", "topic": "AI", "citations": 3}""")
-    Streams.runOnce(stream.select("doi"), "arts2")
-    assert(spark.sql("SELECT count(*) FROM arts2").collect().head.getLong(0) === 3)
+    def count(): Long = spark.sql("SELECT count(*) FROM arts1").collect().head.getLong(0)
+    // the flush step lands the second file while the query runs
+    val landSecond = (scratch: Path) => {
+      assert(count() === 2)
+      land(scratch, "batch2.json",
+        """{"title": "S3", "doi": "d3", "topic": "AI", "citations": 3}""")
+    }
+    Streams.gateDrain("arts1", OutputMode.Append, Some(landSecond)) { scratch =>
+      land(scratch, "batch1.json",
+        """{"title": "S1", "doi": "d1", "topic": "AI", "citations": 1}""",
+        """{"title": "S2", "doi": "d2", "topic": "IoT", "citations": 2}""")
+      val stream = Streams.articleStream(spark, scratch.resolve("landing").toString)
+      assert(stream.isStreaming)
+      stream.select("doi", "topic", "citations")
+    }
+    // second file landed → incremental pickup, no reprocessing
+    assert(count() === 3)
   }
 
   test("article stream restart from checkpoint is exactly-once") {
@@ -36,7 +43,7 @@ class StreamsSpec extends AnyFunSuite {
     // corrupt-file reset; the streaming upgrade's contract is stronger:
     // kill the query, restart it on the SAME checkpoint, and every
     // landed article is emitted exactly once — no loss, no reprocessing
-    val root = Files.createTempDirectory("graft-restart")
+    val root = tempDir("restart")
     val land = root.resolve("landing"); Files.createDirectories(land)
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
@@ -186,7 +193,7 @@ class StreamsSpec extends AnyFunSuite {
     // pass 1 lives only in the state store; after a kill, pass 2's gap
     // closure can only produce the right session if that state was
     // checkpointed and recovered
-    val root = Files.createTempDirectory("graft-state-restart")
+    val root = tempDir("state-restart")
     val land = root.resolve("landing"); Files.createDirectories(land)
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString
@@ -256,11 +263,11 @@ class StreamsSpec extends AnyFunSuite {
       // is discarded as late by the stateful operator
       .withColumn("ts",
         org.apache.spark.sql.functions.timestamp_micros(($"doc_id" % 600L + 3600L) * 1000000L))
-    val dir = Files.createTempDirectory("graft-dedup-stream").toString
-    docs.write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(docs.schema).parquet(dir)
-    Streams.runOnce(Streams.dedupStream(stream), "deduped")
-    val out = spark.table("deduped")
+    val out = Streams.gateDrain("deduped", OutputMode.Append, None) { scratch =>
+      val staged = scratch.resolve("staged").toString
+      docs.write.mode("overwrite").parquet(staged)
+      Streams.dedupStream(spark.readStream.schema(docs.schema).parquet(staged))
+    }
     // one survivor per fingerprint, covering every batch-distinct fp
     val dupFps = out.groupBy("fp").count().filter($"count" > 1)
       .select("fp").collect().map(_.getString(0))
@@ -274,6 +281,109 @@ class StreamsSpec extends AnyFunSuite {
     assert(extra.isEmpty && missing.isEmpty,
       s"out=${out.count()} batchDistinct=${batchFps.count()} " +
       s"extra=${extra.mkString(",")} missing=${missing.mkString(",")}")
+  }
+
+  /** Names of the scratch dirs a gate drain called `queryName` left. */
+  private def leftScratch(queryName: String): Seq[String] = {
+    val ls = Files.list(Streams.gateScratchRoot)
+    try ls.iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(s"graft-$queryName")).toSeq
+    finally ls.close()
+  }
+
+  test("gateDrain: a stage step that throws leaves no query and no scratch dir") {
+    val e = intercept[IllegalStateException] {
+      Streams.gateDrain("gate_stage_throws", OutputMode.Append, None) { scratch =>
+        Seq(1L).toDF("x").write.parquet(scratch.resolve("staged").toString)
+        throw new IllegalStateException("stage failed")
+      }
+    }
+    assert(e.getMessage === "stage failed")
+    assert(spark.streams.active.isEmpty)
+    assert(leftScratch("gate_stage_throws").isEmpty)
+  }
+
+  test("gateDrain: a stream that throws mid-drain leaves no query and no scratch dir") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    def stage(scratch: Path, x: Long): Unit =
+      Seq(x).toDF("x").write.mode("append").parquet(scratch.resolve("staged").toString)
+    // batch 0 drains; the flush's row makes batch 1 fail
+    val e = intercept[Exception] {
+      Streams.gateDrain("gate_drain_throws", OutputMode.Append, Some(stage(_, 2L))) { scratch =>
+        stage(scratch, 1L)
+        spark.readStream.schema("x BIGINT").parquet(scratch.resolve("staged").toString)
+          .select(when(col("x") === 2L, raise_error(lit("drain failed")))
+            .otherwise(col("x")).as("x"))
+      }
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(c => c.getMessage != null && c.getMessage.contains("drain failed")),
+      s"expected the drain's own error in: ${causes(e).map(_.getMessage)}")
+    assert(spark.table("gate_drain_throws").collect().map(_.getLong(0)).toSeq === Seq(1L))
+    assert(spark.streams.active.isEmpty)
+    assert(leftScratch("gate_drain_throws").isEmpty)
+  }
+
+  test("dedupStream resumes from its checkpoint: one survivor per fingerprint across a kill") {
+    import org.apache.spark.sql.functions.{concat, lit, timestamp_micros}
+    // 400 docs over 300 texts: ids i and i + 300 are exact duplicates
+    val d0 = spark.range(0L, 400L).select($"id".as("doc_id"),
+      concat(lit("Doc "), ($"id" % 300L).cast("string"), lit(" body")).as("text"))
+    // e12's synthetic event time: every row of both phases sits inside
+    // one dedup horizon and past epoch 0
+    def timed(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("ts", timestamp_micros(($"doc_id" % 600L + 3600L) * 1000000L))
+    val phaseA = timed(d0.filter($"doc_id" % 2 === 0))
+    // phase B: new docs, plus exact re-sends of every tenth phase-A doc
+    // under new ids — only the recovered dedup state can drop those
+    val phaseB = timed(d0.filter($"doc_id" % 2 === 1).unionByName(
+      d0.filter($"doc_id" % 10 === 0).select(($"doc_id" + 1000000).as("doc_id"), $"text")))
+    val root = tempDir("dedup-restart")
+    val land = root.resolve("landing")
+    val ckpt = root.resolve("ckpt").toString
+    val out = root.resolve("out").toString
+    def runPass(): Unit = {
+      // a FRESH query each pass: state comes only from the checkpoint
+      val q = Streams.dedupStream(
+          spark.readStream.schema(phaseA.schema).parquet(land.toString + "/*"))
+        .writeStream.format("parquet")
+        .option("checkpointLocation", ckpt)
+        .option("path", out)
+        .outputMode("append")
+        .start()
+      q.processAllAvailable()
+      q.stop() // kill
+    }
+    phaseA.write.parquet(land.resolve("a").toString)
+    runPass()
+    val afterA = spark.read.parquet(out).count()
+    phaseB.write.parquet(land.resolve("b").toString)
+    runPass() // resumes: phase B only, against phase A's state
+    val got = spark.read.parquet(out)
+    assert(got.count() > afterA, "the resumed run emitted none of phase B's new docs")
+    val dupFps = got.groupBy("fp").count().filter($"count" > 1).count()
+    assert(dupFps === 0L, "a fingerprint survived twice across the kill")
+    assert(got.filter($"doc_id" >= 1000000L).count() === 0L,
+      "a re-sent phase-A doc survived the resumed run")
+    val batchFps = phaseA.unionByName(phaseB)
+      .select(graft.functions.TextFunctions.fingerprint($"text").as("fp")).distinct()
+    assert(got.select("fp").exceptAll(batchFps).isEmpty)
+    assert(batchFps.exceptAll(got.select("fp")).isEmpty)
+  }
+
+  test("EventQueries drains every stream gate through gateDrain or withGateScratch") {
+    val code = Files.readAllLines(Paths.get("src/main/scala/graft/queries/EventQueries.scala"))
+      .asScala.toSeq.filterNot { l =>
+        val t = l.trim
+        t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+      }
+    def sites(needle: String): Int = code.count(_.contains(needle))
+    assert(sites("scratchTempDir") === 0)
+    assert(sites("deleteRecursively") === 0)
+    // e15's restart pair runs two queries on one checkpoint with its
+    // own foreachBatch sink; every other gate starts in gateDrain
+    assert(sites(".writeStream") === 1)
   }
 
   test("stream-stream attribution join: closed window boundary, ordering, fan-out") {
@@ -291,23 +401,21 @@ class StreamsSpec extends AnyFunSuite {
       (202L, 2L, 1000L * 1000000L + h2us + 1L),
       (203L, 3L, 8000L * 1000000L),
       (204L, 4L, 700L * 1000000L))
-    def write(rows: Seq[(Long, Long, Long)], name: String): String = {
-      val dir = Files.createTempDirectory("graft-e6-spec").resolve(name).toString
-      rows.toDF("event_id", "user_id", "us")
-        .select($"event_id", $"user_id", timestamp_micros($"us").as("ts"))
-        .write.mode("overwrite").parquet(dir)
-      dir
-    }
-    val cDir = write(clicks, "clicks")
-    val pDir = write(purchases, "purchases")
     val sch = clicks.toDF("event_id", "user_id", "us")
       .select($"event_id", $"user_id", timestamp_micros($"us").as("ts")).schema
-    val joined = Streams.attributionJoin(
-      spark.readStream.schema(sch).parquet(cDir),
-      spark.readStream.schema(sch).parquet(pDir))
-    assert(joined.isStreaming)
-    Streams.runOnce(joined, "e6spec")
-    val got = spark.table("e6spec")
+    val out = Streams.gateDrain("e6spec", OutputMode.Append, None) { scratch =>
+      def side(rows: Seq[(Long, Long, Long)], name: String) = {
+        val dir = scratch.resolve(name).toString
+        rows.toDF("event_id", "user_id", "us")
+          .select($"event_id", $"user_id", timestamp_micros($"us").as("ts"))
+          .write.mode("overwrite").parquet(dir)
+        spark.readStream.schema(sch).parquet(dir)
+      }
+      val joined = Streams.attributionJoin(side(clicks, "clicks"), side(purchases, "purchases"))
+      assert(joined.isStreaming)
+      joined
+    }
+    val got = out
       .select($"purchase_id", $"click_id", $"lag_us")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === Set(
@@ -325,7 +433,7 @@ class StreamsSpec extends AnyFunSuite {
     val purchases = Seq(
       (201L, 1L, 1000L * 1000000L + h2us / 2))
     def write(rows: Seq[(Long, Long, Long)], name: String): String = {
-      val dir = Files.createTempDirectory("graft-e13-spec").resolve(name).toString
+      val dir = tempDir("e13-spec").resolve(name).toString
       rows.toDF("event_id", "user_id", "us")
         .select($"event_id", $"user_id", timestamp_micros($"us").as("ts"))
         .write.mode("overwrite").parquet(dir)
@@ -385,7 +493,7 @@ class StreamsSpec extends AnyFunSuite {
       (202L, 1L, 1000L * 1000000L + h2us / 2),
       (203L, 3L, 1000L * 1000000L + h2us + 1L))
     def write(rows: Seq[(Long, Long, Long)], name: String): String = {
-      val dir = Files.createTempDirectory("graft-e20-spec").resolve(name).toString
+      val dir = tempDir("e20-spec").resolve(name).toString
       rows.toDF("event_id", "user_id", "us")
         .select($"event_id", $"user_id", timestamp_micros($"us").as("ts"))
         .write.mode("overwrite").parquet(dir)
@@ -421,7 +529,7 @@ class StreamsSpec extends AnyFunSuite {
       (201L, 1L, 1000L * 1000000L + h2us / 2),
       (202L, 3L, 1000L * 1000000L))   // no preceding click -> null-click row
     def write(rows: Seq[(Long, Long, Long)], name: String): String = {
-      val dir = Files.createTempDirectory("graft-e16-spec").resolve(name).toString
+      val dir = tempDir("e16-spec").resolve(name).toString
       rows.toDF("event_id", "user_id", "us")
         .select($"event_id", $"user_id", timestamp_micros($"us").as("ts"))
         .write.mode("overwrite").parquet(dir)
@@ -464,14 +572,13 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("windowed streaming agg equals the batch window query") {
-    val dir = Files.createTempDirectory("graft-ev")
     val batch = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select($"ts", $"event_type", $"value")
-    batch.write.mode("overwrite").parquet(dir.toString + "/pq")
-    val stream = spark.readStream.schema(batch.schema).parquet(dir.toString + "/pq")
-    Streams.runOnce(Streams.windowedCounts(stream), "winagg",
-      org.apache.spark.sql.streaming.OutputMode.Complete)
-    val streamed = spark.sql("SELECT hour_start, event_type, n FROM winagg")
+    val streamed = Streams.gateDrain("winagg", OutputMode.Complete, None) { scratch =>
+      val staged = scratch.resolve("staged").toString
+      batch.write.mode("overwrite").parquet(staged)
+      Streams.windowedCounts(spark.readStream.schema(batch.schema).parquet(staged))
+    }.select("hour_start", "event_type", "n")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
     // batch path: same aggregation expressed in batch mode
     val batchAgg = batch
@@ -483,14 +590,13 @@ class StreamsSpec extends AnyFunSuite {
   }
 
   test("sliding streaming agg equals the batch sliding window (two windows per event)") {
-    val dir = Files.createTempDirectory("graft-ev-slide")
     val batch = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select($"ts", $"event_type", $"value")
-    batch.write.mode("overwrite").parquet(dir.toString + "/pq")
-    val stream = spark.readStream.schema(batch.schema).parquet(dir.toString + "/pq")
-    Streams.runOnce(Streams.slidingCounts(stream), "slideagg",
-      org.apache.spark.sql.streaming.OutputMode.Complete)
-    val streamed = spark.sql("SELECT win_start, event_type, n FROM slideagg")
+    val streamed = Streams.gateDrain("slideagg", OutputMode.Complete, None) { scratch =>
+      val staged = scratch.resolve("staged").toString
+      batch.write.mode("overwrite").parquet(staged)
+      Streams.slidingCounts(spark.readStream.schema(batch.schema).parquet(staged))
+    }.select("win_start", "event_type", "n")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
     val batchAgg = batch
       .groupBy(org.apache.spark.sql.functions.window($"ts", "1 hour", "30 minutes"),
